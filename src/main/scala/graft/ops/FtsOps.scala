@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, TranscriptGen, Turn}
-import graft.query.Searcher
+import graft.query.{Hit, Searcher}
 import Op.t
 
 /** Full-text engine queries — the north-rule path (SURVEY.md §3.1): build
@@ -693,8 +693,8 @@ object FtsOps {
       }),
 
     Op("fts_cursor_deep_page",
-      "cursorMark deep paging on the SCORING path: page 2 of 5 via " +
-        "searchAfter(score, docId) — only hits strictly after the previous " +
+      "cursorMark deep paging on the SCORING path: page 2 of 5 via the " +
+        "topKHits after-cursor (score, docId) — only hits strictly after the previous " +
         "page's last (score desc, docId asc) position enter a constant " +
         "k-sized heap (search/CursorMark.java:46-63; Lucene " +
         "PagingTopScoreDocCollector), no offset-sized heap, same one-stage " +
@@ -705,7 +705,7 @@ object FtsOps {
         val sr = searcher(s, dir, "documents")
         val parsed = graft.query.QueryParser.parse("data query fast window")
         val page1 = sr.topKHits(parsed, 5).collect()
-        sr.searchAfter(parsed, 5, page1.lastOption).toDF()
+        sr.topKHits(parsed, 5, after = page1.lastOption).toDF()
       }),
 
     Op("fts_time_allowed",
@@ -1135,8 +1135,8 @@ object FtsOps {
         val sr = searcher(s, dir, "documents")
         val parsed = graft.query.QueryParser.parse("data query fast window")
         val p1 = sr.topKHits(parsed, 10).collect()
-        val p2 = sr.searchAfter(parsed, 10, p1.lastOption).collect()
-        val p3 = sr.searchAfter(parsed, 10, p2.lastOption).collect()
+        val p2 = sr.topKHits(parsed, 10, after = p1.lastOption).collect()
+        val p3 = sr.topKHits(parsed, 10, after = p2.lastOption).collect()
         val stitched = (p1 ++ p2 ++ p3).zipWithIndex
           .map { case (h, i) => (i + 1L, h.doc_id) }.toSeq
         val idmap = s.read.parquet(s"$idx/docs")
@@ -1155,21 +1155,21 @@ object FtsOps {
               |SELECT row_number() OVER (ORDER BY sc DESC, doc_id) AS rank, doc_id
               |FROM kept ORDER BY sc DESC, doc_id LIMIT 20""".stripMargin),
       (s, dir) => {
+        import s.implicits._
         val idx = index(s, dir, "documents")
         val sr = searcher(s, dir, "documents")
         val idmap = s.read.parquet(s"$idx/docs")
           .select(col("doc_id").as("hit_doc"),
             regexp_extract(col("conv_id"), "(\\d+)", 1).cast("long").as("doc_id"))
-        val hits = sr.dismaxTopK("data query src7 fast",
-            Seq("text" -> 1f, "role" -> 2f), tie = 0.1f, mm = 2, k = 20)
-          .withColumnRenamed("doc_id", "hit_doc")
-          .join(idmap, "hit_doc")
-          .select(col("doc_id"), col("score"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(pmod(col("doc_id"), lit(1)))
-          .orderBy(col("score").desc, col("doc_id").asc)
-        hits.withColumn("rank", row_number().over(w).cast("long"))
-          .select(col("rank"), col("doc_id")).orderBy(col("rank"))
+        val top = topNTieSafe(20) { k =>
+          sr.dismaxTopK("data query src7 fast",
+              Seq("text" -> 1f, "role" -> 2f), tie = 0.1f, mm = 2, k = k)
+            .withColumnRenamed("doc_id", "hit_doc")
+            .join(idmap, "hit_doc")
+            .select(col("doc_id"), col("score")).as[Hit].collect()
+        }
+        top.zipWithIndex.map { case (h, i) => (i + 1L, h.doc_id) }.toSeq
+          .toDF("rank", "doc_id")
       }),
 
     Op("fts_per_turn_equality",
@@ -1186,6 +1186,23 @@ object FtsOps {
           .limit(100)
       })
   )
+
+  /** The top n hits by (score desc, doc_id asc) where `page(k)` returns
+    * its k best hits under ANOTHER tie-break (the engine's internal docId)
+    * with doc_id already mapped to the id ranked on here. A single k = n
+    * page would keep the wrong members of a score tie straddling rank n, so
+    * k doubles from n until the page holds every hit tied with the n-th:
+    * fewer than k hits came back, or the last scores strictly below it. */
+  private[graft] def topNTieSafe(n: Int)(page: Int => Array[Hit]): Array[Hit] = {
+    def ranked(k: Int) = page(k).sortBy(h => (-h.score, h.doc_id))
+    var k = n
+    var hits = ranked(k)
+    while (hits.length == k && hits.last.score == hits(n - 1).score) {
+      k *= 2
+      hits = ranked(k)
+    }
+    hits.take(n)
+  }
 
   /** Flagship query for SparkEntry.entry: end-to-end index+search on the
     * smallest scale factor. */

@@ -100,11 +100,11 @@ object PlanAudit {
     sb.append(s"\n## fts topKHits, cached searcher (single-stage: InMemoryTableScan → per-partition WAND → TakeOrdered; NO exchange)\n\n```\n")
     sb.append(hits1.queryExecution.explainString(ExplainMode.fromString("formatted")))
     sb.append("```\n")
-    // searchAfter (cursorMark page 2) must compile to the SAME single-stage
-    // shape — the cursor rides in the broadcast metadata, not the plan
+    // cursorMark page 2 (`after` = page 1's last hit) must compile to the
+    // SAME single-stage shape — the cursor rides in the broadcast metadata
     val page1 = cached.topKHits("data query fast window", 5).collect()
-    val page2 = cached.searchAfter(
-      graft.query.QueryParser.parse("data query fast window"), 5, page1.lastOption)
+    val page2 = cached.topKHits(
+      graft.query.QueryParser.parse("data query fast window"), 5, after = page1.lastOption)
     sb.append(s"\n## fts searchAfter page 2 (identical single-stage plan; cursor in broadcast metadata)\n\n```\n")
     sb.append(page2.queryExecution.explainString(ExplainMode.fromString("formatted")))
     sb.append("```\n")

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.roaringbitmap.RoaringBitmap
 import graft.analysis.Analyzer
@@ -19,18 +19,20 @@ import graft.index.{CorpusStats, PostingRow}
   * A second stage joins the k winners back to the stored-fields table
   * (Solr's PURPOSE_GET_FIELDS round-trip).
   *
-  * Execution shape: postings files are written segment-aligned by the
-  * builder, so when the cached scan provably keeps every segment inside one
-  * partition (`colocated`, verified against the materialized cache layout)
-  * a query is ONE narrow stage — `term IN (...)` filter on the cached
-  * postings (the norms sidecar rides along as the `term == ""` rows) →
-  * per-partition WAND → TakeOrdered driver merge. No shuffle. Filter (fq)
+  * Execution shape: every query path (top-k, top-k with count, match set,
+  * dismax, phrase enumeration) hands a per-segment body to ONE stage
+  * builder, [[perSegment]], which alone decides the plan shape. Postings
+  * files are written segment-aligned by the builder, so when the cached
+  * scan provably keeps every segment inside one partition (`colocated`) the
+  * stage is one narrow per-partition pass over the `term IN (...)`-filtered
+  * cached postings (the norms sidecar rides along as the `term == ""`
+  * rows): no shuffle, and TakeOrdered merges on the driver. Filter (fq)
   * DocSets are driver-collected RoaringBitmaps broadcast with the query
-  * metadata. When colocation can't be proven the same scoring body runs
-  * after an explicit `groupByKey(segment_id)` shuffle — at 10^12-doc scale
-  * with cache=false that shuffle carries only the queried terms' rows
-  * (term-predicate pushdown on the term-sorted parquet), which is the plan
-  * a real cluster wants anyway.
+  * metadata. When colocation can't be proven, or an oversized DocSet rides
+  * as rows, the same body runs after an explicit shuffle by segment_id —
+  * at 10^12-doc scale with cache=false that shuffle carries only
+  * the queried terms' rows (term-predicate pushdown on the term-sorted
+  * parquet), which is the plan a real cluster wants anyway.
   */
 final class Searcher(
     val spark: SparkSession,
@@ -77,12 +79,12 @@ final class Searcher(
     }
   }
 
-  /** True iff every segment's rows live inside a single cached partition —
-    * checked against the MATERIALIZED cache layout, not inferred from file
-    * sizes, so the one-stage path can never silently score a torn segment. */
   /** Exposed for tests/plan audits: true = one-stage no-shuffle path. */
   def usesColocatedPath: Boolean = colocated
 
+  /** True iff every segment's rows live inside a single cached partition —
+    * checked against the MATERIALIZED cache layout, not inferred from file
+    * sizes, so the one-stage path can never silently score a torn segment. */
   private val colocated: Boolean = cache && {
     try postingsDF
       .select(spark_partition_id().as("pid"), $"segment_id").distinct()
@@ -361,6 +363,30 @@ final class Searcher(
     })
   }
 
+  /** The one per-segment stage every query path runs: `body` gets one
+    * segment's rows (sidecar + queried-term rows, plus the FqRowTerm row
+    * when the DocSet rides as rows) and its output is the stage's output.
+    * The plan shape is chosen here and nowhere else:
+    *  - an executor-side DocSet (Right) rides the shuffle by segment_id
+    *    WITH that segment's queried-term rows — the shuffle moves
+    *    only queried-term postings + one bitmap row per segment, the plan a
+    *    10^12-doc cluster wants for a match-half-the-corpus fq;
+    *  - a colocated cache is one narrow stage: group the partition's rows
+    *    by segment (whole segments per partition, verified above) — no
+    *    shuffle;
+    *  - anything else shuffles by segment_id.
+    * `body` must reference only locals and companion functions so the task
+    * closure never serializes the Searcher. */
+  private def perSegment[T: Encoder](rows: Dataset[PostingRow], fq: FqEntry)(
+      body: Array[PostingRow] => Iterator[T]): Dataset[T] = fq match {
+    case Right(fqDs) =>
+      rowsWithFq(rows, fqDs).groupByKey(_.segment_id).flatMapGroups((_, rs) => body(rs.toArray))
+    case _ if colocated =>
+      rows.mapPartitions(_.toArray.groupBy(_.segment_id).iterator.flatMap(g => body(g._2)))
+    case _ =>
+      rows.groupByKey(_.segment_id).flatMapGroups((_, rs) => body(rs.toArray))
+  }
+
   /** @param segmentDocBudget max docs scored per segment before early
     *                         termination with best-so-far (the reference's
     *                         query-limit surface, QueryLimits.java /
@@ -372,47 +398,23 @@ final class Searcher(
     *                         .java; `timeAllowed` request param) — returns
     *                         best-so-far on expiry, non-deterministic by
     *                         nature like the reference's partialResults
-    * @param afterScore/afterDoc searchAfter cursor: only hits strictly
-    *                         after this (score desc, docId asc) rank
-    *                         position are returned — cursorMark deep paging
-    *                         (CursorMark.java:46-63) with a constant-size
-    *                         heap per page. afterScore = NaN disables. */
+    * @param after            cursorMark deep paging (CursorMark.java:46-63)
+    *                         over the totally-ordered (score desc, docId
+    *                         asc) sort key: only hits strictly after this
+    *                         hit — the last of the previous page — are
+    *                         returned, with the same k-sized heap as page 1.
+    *                         The cursor rides with the query metadata, so
+    *                         the plan is the first page's. None = first page. */
   def topKHits(parsed0: ParsedQuery, k: Int, segmentDocBudget: Int = Int.MaxValue,
-      timeAllowedMs: Long = Long.MaxValue,
-      afterScore: Float = Float.NaN, afterDoc: Long = -1L): Dataset[Hit] = {
+      timeAllowedMs: Long = Long.MaxValue, after: Option[Hit] = None): Dataset[Hit] = {
     if (k <= 0) return spark.emptyDataset[Hit]
     prepare(parsed0) match {
       case None => spark.emptyDataset[Hit]
       case Some((bcMeta, rows, fqEntry)) =>
-        val hits: Dataset[Hit] = fqEntry match {
-          case Right(fqDs) =>
-            // oversized DocSet: each segment's bitmap rides the (narrow)
-            // shuffle WITH that segment's queried-term rows — the shuffle
-            // moves only queried-term postings + one bitmap row per
-            // segment, which is the plan a 10^12-doc cluster wants for a
-            // match-half-the-corpus fq.
-            rowsWithFq(rows, fqDs).groupByKey(_.segment_id).flatMapGroups { (_, rs) =>
-              Searcher.scoreGroup(rs.toArray, bcMeta.value, k, segmentDocBudget,
-                timeAllowedMs, afterScore, afterDoc)
-            }
-          case _ if colocated =>
-            // one narrow stage over the cached scan: group the partition's
-            // rows by segment (whole segments per partition, verified
-            // above) and run WAND per segment — no shuffle, TakeOrdered
-            // merges on the driver
-            rows.mapPartitions { it =>
-              it.toArray.groupBy(_.segment_id).iterator.flatMap { case (_, rs) =>
-                Searcher.scoreGroup(rs, bcMeta.value, k, segmentDocBudget,
-                  timeAllowedMs, afterScore, afterDoc)
-              }
-            }
-          case _ =>
-            rows.groupByKey(_.segment_id).flatMapGroups { (_, rs) =>
-              Searcher.scoreGroup(rs.toArray, bcMeta.value, k, segmentDocBudget,
-                timeAllowedMs, afterScore, afterDoc)
-            }
-        }
-        hits.orderBy($"score".desc, $"doc_id".asc).limit(k)
+        perSegment(rows, fqEntry) { rs =>
+          Searcher.scoreGroupCounted(rs, bcMeta.value, k, segmentDocBudget,
+            prune = true, timeAllowedMs, after)._1.iterator
+        }.orderBy($"score".desc, $"doc_id".asc).limit(k)
     }
   }
 
@@ -449,22 +451,6 @@ final class Searcher(
     hits.take(k)
   }
 
-  /** cursorMark deep paging on the scoring path: the next page of k hits
-    * strictly after the cursor (the last hit of the previous page) in
-    * (score desc, docId asc) rank order — CursorMark.java:46-63 semantics
-    * over the totally-ordered (score, docId) sort key. Unlike offset
-    * paging, page n+1 scores with the same k-sized heap as page 1; the
-    * cursor rides with the query metadata, so the plan is identical to
-    * [[topKHits]]. None = first page. */
-  def searchAfter(parsed: ParsedQuery, k: Int, after: Option[Hit]): Dataset[Hit] =
-    after match {
-      case None => topKHits(parsed, k)
-      case Some(h) => topKHits(parsed, k, afterScore = h.score, afterDoc = h.doc_id)
-    }
-
-  def searchAfter(q: String, k: Int, after: Option[Hit]): Dataset[Hit] =
-    searchAfter(QueryParser.parse(q, analyzer), k, after)
-
   /** Top-k with a hit count — the numFound / minExactCount response surface
     * (`solr/core/src/java/org/apache/solr/search/QueryCommand.java:43`,
     * QueryComponent.java:448-452). minExactCount > k asks for an EXACT
@@ -473,39 +459,22 @@ final class Searcher(
     * minExactCount=Integer.MAX_VALUE). Otherwise the pruned WAND runs and
     * totalHits is a LOWER BOUND (Lucene's GREATER_THAN_OR_EQUAL_TO) — the
     * latency the approximate count buys. Either way the top-k hits
-    * themselves are identical (EngineSpec pins this). */
+    * themselves are identical (EngineSpec pins this). k <= 0 returns no
+    * hits with the count of k = 1 (a count-only request, rows=0). */
   def topKWithCount(parsed0: ParsedQuery, k: Int,
       minExactCount: Int = Int.MaxValue): Searcher.TopDocs = {
+    if (k <= 0) return topKWithCount(parsed0, 1, minExactCount).copy(hits = Array.empty)
     val exact = minExactCount > k
     prepare(parsed0) match {
       case None => Searcher.TopDocs(Array.empty, 0L, isExact = true)
       case Some((bcMeta, rows, fqEntry)) =>
-        val perSegment: Dataset[(Seq[Hit], Long)] = fqEntry match {
-          case Right(fqDs) =>
-            rowsWithFq(rows, fqDs).groupByKey(_.segment_id).mapGroups { (_, rs) =>
-              val (h, c) = Searcher.scoreGroupCounted(
-                rs.toArray, bcMeta.value, k, Int.MaxValue, prune = !exact)
-              (h.toSeq, c)
-            }
-          case _ if colocated =>
-            rows.mapPartitions { it =>
-              it.toArray.groupBy(_.segment_id).iterator.map { case (_, rs) =>
-                val (h, c) = Searcher.scoreGroupCounted(
-                  rs, bcMeta.value, k, Int.MaxValue, prune = !exact)
-                (h.toSeq, c)
-              }
-            }
-          case _ =>
-            rows.groupByKey(_.segment_id).mapGroups { (_, rs) =>
-              val (h, c) = Searcher.scoreGroupCounted(
-                rs.toArray, bcMeta.value, k, Int.MaxValue, prune = !exact)
-              (h.toSeq, c)
-            }
-        }
         // numSegments results: the driver PQ-merge is exactly Solr's
         // distributed-merge role (QueryComponent.java:971-1060), with the
         // same (score desc, docId asc) tie-break as TakeOrdered
-        val seg = perSegment.collect()
+        val seg = perSegment(rows, fqEntry) { rs =>
+          val (h, c) = Searcher.scoreGroupCounted(rs, bcMeta.value, k, Int.MaxValue, prune = !exact)
+          Iterator.single((h.toSeq, c))
+        }.collect()
         val hits = seg.iterator.flatMap(_._1).toArray
           .sortBy(h => (-h.score, h.doc_id)).take(k)
         Searcher.TopDocs(hits, seg.iterator.map(_._2).sum, isExact = exact)
@@ -522,22 +491,7 @@ final class Searcher(
     prepare(parsed0) match {
       case None => spark.emptyDataset[Long]
       case Some((bcMeta, rows, fqEntry)) =>
-        fqEntry match {
-          case Right(fqDs) =>
-            rowsWithFq(rows, fqDs).groupByKey(_.segment_id).flatMapGroups { (_, rs) =>
-              Searcher.matchGroup(rs.toArray, bcMeta.value)
-            }
-          case _ if colocated =>
-            rows.mapPartitions { it =>
-              it.toArray.groupBy(_.segment_id).iterator.flatMap { case (_, rs) =>
-                Searcher.matchGroup(rs, bcMeta.value)
-              }
-            }
-          case _ =>
-            rows.groupByKey(_.segment_id).flatMapGroups { (_, rs) =>
-              Searcher.matchGroup(rs.toArray, bcMeta.value)
-            }
-        }
+        perSegment(rows, fqEntry)(rs => Searcher.matchGroup(rs, bcMeta.value))
     }
   }
 
@@ -585,18 +539,8 @@ final class Searcher(
     val rows = postings
       .where($"term".isin("" +: queried: _*))
       .as[PostingRow]
-    val hits: Dataset[Hit] =
-      if (colocated)
-        rows.mapPartitions { it =>
-          it.toArray.groupBy(_.segment_id).iterator.flatMap { case (_, rs) =>
-            Searcher.scoreDisMaxGroup(rs, bcQ.value, k)
-          }
-        }
-      else
-        rows.groupByKey(_.segment_id).flatMapGroups { (_, rs) =>
-          Searcher.scoreDisMaxGroup(rs.toArray, bcQ.value, k)
-        }
-    hits.orderBy($"score".desc, $"doc_id".asc).limit(k)
+    perSegment(rows, fq = null)(rs => Searcher.scoreDisMaxGroup(rs, bcQ.value, k))
+      .orderBy($"score".desc, $"doc_id".asc).limit(k)
   }
 
   /** Exact-phrase match enumeration: every (internal docId, phraseFreq)
@@ -604,13 +548,12 @@ final class Searcher(
     * integer artifact of the phrase path (scores are float and gated by
     * EngineSpec instead). */
   def phraseFreqs(terms: Seq[String], slop: Int = 0): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val dfs = termStats(terms)
     if (terms.isEmpty || terms.exists(t => dfs.getOrElse(t, 0L) == 0L))
       return spark.emptyDataset[(Long, Long)].toDF("did", "freq")
     val termsV = terms.toVector
-    val rows = postings.where(col("term").isin(terms: _*)).as[PostingRow]
-    rows.groupByKey(_.segment_id).flatMapGroups { (_, ps) =>
+    val rows = postings.where($"term".isin(terms: _*)).as[PostingRow]
+    perSegment(rows, fq = null) { ps =>
       val byTerm = ps.map(pr => pr.term -> pr).toMap
       if (!termsV.forall(byTerm.contains)) Iterator.empty
       else {
@@ -772,25 +715,6 @@ object Searcher {
       conjMeta: Vector[(Vector[String], Vector[GroupPhrase], Int, Int)] =
         Vector.empty) // (terms, phrase members, occur 1|2, queryPos)
 
-  /** Score one segment's rows (sidecar row + queried-term rows) — the
-    * shared body of the no-shuffle mapPartitions path and the groupByKey
-    * fallback. Static so task closures don't capture the Searcher.
-    *
-    * @param timeAllowedMs wall-clock scoring limit PER SEGMENT, measured
-    *                      from this segment's scoring start (the per-shard
-    *                      timer of search/TimeAllowedLimit.java); best-
-    *                      so-far results on expiry, like the reference's
-    *                      partialResults
-    * @param afterScore/afterDoc searchAfter cursor (NaN = none) — see TopK */
-  private[query] def scoreGroup(
-      rs: Array[PostingRow], qm: QueryMeta, k: Int, docBudget: Int,
-      timeAllowedMs: Long = Long.MaxValue,
-      afterScore: Float = Float.NaN, afterDoc: Long = -1L): Iterator[Hit] =
-    scoreGroupCounted(rs, qm, k, docBudget, prune = true,
-      timeAllowedMs, afterScore, afterDoc)._1.iterator
-
-  /** [[scoreGroup]] plus the segment's scored-doc count; prune = false
-    * disables WAND pruning so the count is the segment's exact numFound. */
   /** Cursor construction shared by the scoring path and the DocSet
     * (match-enumeration) path: (should, must, not, sidecar, filter), or
     * None when the segment provably matches nothing (no sidecar, or a MUST
@@ -805,6 +729,17 @@ object Searcher {
       .filter(pr => pr.term.nonEmpty && pr.term != FqRowTerm)
       .map(pr => pr.term -> pr).toMap
     val nc = qm.normCache
+    // fresh member cursors (cursors are stateful; a term used both
+    // standalone and inside a phrase needs independent iterators); phrase
+    // idf = plain sum of member idfs in member order (boosts apply to term
+    // clauses, not phrase members)
+    def phraseCursor(terms: Vector[String], qpos: Int, slop: Int): Cursor = {
+      val members = terms.map(t =>
+        new PostingCursor(byTerm(t).blocks, qm.idfs(t), nc, 0)).toArray
+      var idfSum = 0f
+      terms.foreach(t => idfSum += qm.idfs(t))
+      new PhraseCursor(members, idfSum, nc, qpos, slop)
+    }
     val mustCur = scala.collection.mutable.ArrayBuffer.empty[Cursor]
     val shouldCur = scala.collection.mutable.ArrayBuffer.empty[Cursor]
     val notCur = scala.collection.mutable.ArrayBuffer.empty[Cursor]
@@ -823,15 +758,7 @@ object Searcher {
     }
     qm.phraseMeta.foreach { case (terms, occ, qpos, slop) =>
       if (terms.forall(byTerm.contains)) {
-        // fresh member cursors (cursors are stateful; a term used both
-        // standalone and inside a phrase needs independent iterators);
-        // phrase idf = plain sum of member idfs (boosts apply to term
-        // clauses, not phrase members)
-        val members = terms.map(t =>
-          new PostingCursor(byTerm(t).blocks, qm.idfs(t), nc, 0)).toArray
-        var idfSum = 0f
-        terms.foreach(t => idfSum += qm.idfs(t))
-        val pc = new PhraseCursor(members, idfSum, nc, qpos, slop)
+        val pc = phraseCursor(terms, qpos, slop)
         occ match {
           case 0 => mustCur += pc
           case 1 => shouldCur += pc
@@ -847,13 +774,7 @@ object Searcher {
         new PostingCursor(byTerm(t).blocks, wIdf(t), nc, 0))
       val phraseCursors: Vector[Cursor] = phrases
         .filter(_.terms.forall(byTerm.contains))
-        .map { gp =>
-          val members = gp.terms.map(t =>
-            new PostingCursor(byTerm(t).blocks, qm.idfs(t), nc, 0)).toArray
-          var idfSum = 0f
-          gp.terms.foreach(t => idfSum += qm.idfs(t))
-          new PhraseCursor(members, idfSum, nc, 0, gp.slop)
-        }
+        .map(gp => phraseCursor(gp.terms, 0, gp.slop))
       val all = (termCursors ++ phraseCursors).toArray
       if (all.isEmpty) missingMust = true // MUST group can't match here
       else mustCur += new DisjunctionCursor(all, qpos)
@@ -867,13 +788,7 @@ object Searcher {
         phrases.forall(_.terms.forall(byTerm.contains))) {
         val termCursors: Vector[Cursor] = terms.map(t =>
           new PostingCursor(byTerm(t).blocks, wIdf(t), nc, 0))
-        val phraseCursors: Vector[Cursor] = phrases.map { gp =>
-          val pcs = gp.terms.map(t =>
-            new PostingCursor(byTerm(t).blocks, qm.idfs(t), nc, 0)).toArray
-          var idfSum = 0f
-          gp.terms.foreach(t => idfSum += qm.idfs(t))
-          new PhraseCursor(pcs, idfSum, nc, 0, gp.slop)
-        }
+        val phraseCursors: Vector[Cursor] = phrases.map(gp => phraseCursor(gp.terms, 0, gp.slop))
         val cc = new ConjunctionCursor((termCursors ++ phraseCursors).toArray, qpos)
         if (occ == 1) shouldCur += cc else notCur += cc
       }
@@ -896,12 +811,21 @@ object Searcher {
     }
   }
 
-  /** [[scoreGroup]] plus the segment's scored-doc count; prune = false
-    * disables WAND pruning so the count is the segment's exact numFound. */
+  /** Score one segment's rows (sidecar row + queried-term rows): its top-k
+    * hits plus its scored-doc count; prune = false disables WAND pruning so
+    * the count is the segment's exact numFound. Static so task closures
+    * don't capture the Searcher.
+    *
+    * @param timeAllowedMs wall-clock scoring limit PER SEGMENT, measured
+    *                      from this segment's scoring start (the per-shard
+    *                      timer of search/TimeAllowedLimit.java); best-
+    *                      so-far results on expiry, like the reference's
+    *                      partialResults
+    * @param after         searchAfter cursor (None = first page) — see TopK */
   private[query] def scoreGroupCounted(
       rs: Array[PostingRow], qm: QueryMeta, k: Int, docBudget: Int,
       prune: Boolean, timeAllowedMs: Long = Long.MaxValue,
-      afterScore: Float = Float.NaN, afterDoc: Long = -1L): (Array[Hit], Long) =
+      after: Option[Hit] = None): (Array[Hit], Long) =
     buildCursors(rs, qm) match {
       case None => (Array.empty, 0L)
       case Some((should, must, not, sc, filter)) =>
@@ -909,8 +833,8 @@ object Searcher {
           if (timeAllowedMs == Long.MaxValue) Long.MaxValue
           else System.nanoTime() + timeAllowedMs * 1000000L
         Wand.scoreSegmentCounted(should, must, not,
-          sc.norms, sc.first_doc, filter, k, docBudget, prune,
-          deadlineNs, afterScore, afterDoc)
+          sc.norms, sc.first_doc, filter, k, docBudget, prune, deadlineNs,
+          after.fold(Float.NaN)(_.score), after.fold(-1L)(_.doc_id))
     }
 
   /** The segment's match set (DocSet): every docId matching the boolean +

@@ -479,31 +479,7 @@ final class TopK(k: Int, afterScore: Float = Float.NaN, afterDoc: Long = -1L) {
   * `solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:1207,1242-1250`). */
 object Wand {
 
-  /** @param should  SHOULD cursors (query order); empty if pure conjunction
-    * @param must    MUST cursors (query order); empty if pure disjunction
-    * @param mustNot cursors whose docs are excluded
-    * @param norms   segment norms blob, indexed by (doc - firstDoc)
-    * @param filter  optional allowed-docs bitmap over (doc - firstDoc)
-    */
-  /** @param docBudget max docs SCORED in this segment before terminating
-    *                   early with the best-so-far — the deterministic
-    *                   rendering of the reference's query limits
-    *                   (EarlyTerminatingCollector.java's collected-doc
-    *                   budget; QueryLimits.java / timeAllowed is the
-    *                   wall-clock variant, non-deterministic by nature) */
-  def scoreSegment(
-      should: Array[Cursor],
-      must: Array[Cursor],
-      mustNot: Array[Cursor],
-      norms: Array[Byte],
-      firstDoc: Long,
-      filter: Option[RoaringBitmap],
-      k: Int,
-      docBudget: Int = Int.MaxValue): Array[Hit] =
-    scoreSegmentCounted(should, must, mustNot, norms, firstDoc, filter, k,
-      docBudget, prune = true)._1
-
-  /** [[scoreSegment]] plus the segment's scored-doc count — the numFound /
+  /** Score one segment: its top-k hits plus its scored-doc count — the numFound /
     * minExactCount surface (`solr/core/src/java/org/apache/solr/search/QueryCommand.java:43`,
     * QueryComponent.java:448-452): with `prune = false` WAND pruning is off,
     * every doc matching the boolean+filter semantics is scored, and the
@@ -513,6 +489,17 @@ object Wand {
     * Conjunctions evaluate their full match set either way, so their count
     * is always exact (modulo docBudget).
     *
+    * @param should    SHOULD cursors (query order); empty if pure conjunction
+    * @param must      MUST cursors (query order); empty if pure disjunction
+    * @param mustNot   cursors whose docs are excluded
+    * @param norms     segment norms blob, indexed by (doc - firstDoc)
+    * @param filter    optional allowed-docs bitmap over (doc - firstDoc)
+    * @param docBudget max docs SCORED in this segment before terminating
+    *                   early with the best-so-far — the deterministic
+    *                   rendering of the reference's query limits
+    *                   (EarlyTerminatingCollector.java's collected-doc
+    *                   budget; QueryLimits.java / timeAllowed is the
+    *                   wall-clock variant, non-deterministic by nature)
     * @param deadlineNs absolute System.nanoTime() deadline — the wall-clock
     *                   `timeAllowed` limit (search/TimeAllowedLimit.java):
     *                   scoring stops with best-so-far once the clock passes

@@ -452,8 +452,9 @@ class EngineSpec extends AnyFunSuite {
     // silently pays a shuffle — a performance regression, not a bug)
     assert(searcher.usesColocatedPath,
       "cached searcher failed to verify segment/partition colocation")
-    // cache=false forces the shuffle fallback; both paths share scoreGroup
-    // but differ in partitioning, filter-map delivery, and merge shape —
+    // cache=false forces the shuffle fallback; both paths run the same
+    // per-segment bodies but differ in partitioning, filter-map delivery,
+    // and merge shape —
     // identical (doc_id, score) ranking is the contract
     val fallback = new Searcher(spark, indexDir, cache = false)
     assert(!fallback.usesColocatedPath)
@@ -462,7 +463,44 @@ class EngineSpec extends AnyFunSuite {
       val a = searcher.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
       val b = fallback.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
       assert(a == b, s"[$q] colocated vs fallback ranking diverged")
+      assertSameCollectors(searcher, fallback, parsed, q)
     }
+    for (terms <- Seq(Seq("the", "data"), Seq("error", "retry")); slop <- Seq(0, 2))
+      assert(phraseFreqSet(searcher, terms, slop) == phraseFreqSet(fallback, terms, slop),
+        s"[$terms~$slop] colocated vs fallback phraseFreqs diverged")
+    val qf = Seq("text" -> 1f, "role" -> 2f)
+    for (q <- Seq("user data error", "assistant spark shuffle", "tool the")) {
+      val a = searcher.dismaxTopK(q, qf, 0.1f, 1, 12).collect().map(h => (h.doc_id, h.score)).toSeq
+      val b = fallback.dismaxTopK(q, qf, 0.1f, 1, 12).collect().map(h => (h.doc_id, h.score)).toSeq
+      assert(a == b, s"[$q] colocated vs fallback dismax diverged")
+    }
+    // plan shapes: every collector is one narrow stage when colocated and
+    // one groupByKey exchange on the fallback
+    val parsed = QueryParser.parse("the data")
+    def plans(s: Searcher) = Seq(s.topKHits(parsed, 12), s.matchingDocIds(parsed),
+      s.phraseFreqs(Seq("the", "data")), s.dismaxTopK("user data error", qf, 0.1f, 1, 12))
+    plans(searcher).foreach(ds => assert(!hasExchange(ds), ds.queryExecution.executedPlan))
+    plans(fallback).foreach(ds => assert(hasExchange(ds), ds.queryExecution.executedPlan))
+  }
+
+  private def hasExchange(ds: org.apache.spark.sql.Dataset[_]): Boolean =
+    ds.queryExecution.executedPlan.toString.contains("Exchange")
+
+  private def phraseFreqSet(s: Searcher, terms: Seq[String], slop: Int): Set[(Long, Long)] =
+    s.phraseFreqs(terms, slop).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+  /** topKWithCount (exact and pruned) and matchingDocIds agree on two
+    * searchers whose plan shapes differ. */
+  private def assertSameCollectors(a: Searcher, b: Searcher,
+      parsed: graft.query.ParsedQuery, q: String): Unit = {
+    for (minExact <- Seq(Int.MaxValue, 5)) {
+      val x = a.topKWithCount(parsed, 12, minExact)
+      val y = b.topKWithCount(parsed, 12, minExact)
+      assert(x.hits.map(h => (h.doc_id, h.score)).toSeq == y.hits.map(h => (h.doc_id, h.score)).toSeq &&
+        x.totalHits == y.totalHits && x.isExact == y.isExact, s"[$q] topKWithCount($minExact) diverged")
+    }
+    assert(a.matchingDocIds(parsed).collect().toSet == b.matchingDocIds(parsed).collect().toSet,
+      s"[$q] matchingDocIds diverged")
   }
 
   test("phrase slop: parser reads the suffix; freq is monotone in slop; slop 0 == exact") {
@@ -493,61 +531,85 @@ class EngineSpec extends AnyFunSuite {
     assert(f2 == brute, "slop-2 phrase freqs diverged from brute force")
   }
 
-  test("dismax multi-field engine == driver-side brute force (qf text^1 role^2, tie, mm)") {
+  /** Brute-force dismax: every (doc_id, score) with at least mm matched
+    * terms, replicating the engine's float math exactly: same formulas
+    * (shared Bm25), same accumulation order (fields in qf order inside a
+    * term, terms in query order). */
+  private def bruteDismax(q: String, qf: Seq[(String, Float)], tie: Float,
+      mm: Int): Seq[(Long, Float)] = {
     val bm25 = Bm25()
     val anal = graft.analysis.Analyzer.default
+    val rows = searcher.docs.select($"doc_id", $"role", $"text").collect()
+      .map(r => (r.getLong(0), r.getString(1), anal.analyze(r.getString(2))))
+    val n = searcher.corpus.doc_count
+    val avgdl = searcher.avgdl
+    val nc = bm25.normCache(avgdl)
+    val qterms = anal.analyze(q).toVector.distinct
+    def dfText(t: String) = rows.count(_._3.contains(t)).toLong
+    def dfRole(t: String) = rows.count(_._2 == t).toLong
+    val wIdf: Map[(String, String), Float] = (for {
+      t <- qterms
+      (f, w) <- qf
+      df = if (f == "text") dfText(t) else dfRole(t)
+      if df > 0
+    } yield (f, t) -> (w * bm25.idf(n, df))).toMap
+    rows.toSeq.flatMap { case (docId, role, toks) =>
+      val norm = graft.codec.SmallFloat.intToByte4(toks.length)
+      var acc = 0f
+      var matched = 0
+      qterms.foreach { t =>
+        var mx = 0f
+        var sum = 0f
+        var any = false
+        qf.foreach { case (f, _) =>
+          wIdf.get((f, t)).foreach { wi =>
+            if (f == "text") {
+              val tf = toks.count(_ == t)
+              if (tf > 0) {
+                val s = bm25.scoreCached(tf, norm, wi, nc)
+                any = true; sum += s; if (s > mx) mx = s
+              }
+            } else if (role == t) {
+              val s = wi * (1f / (1f + bm25.k1))
+              any = true; sum += s; if (s > mx) mx = s
+            }
+          }
+        }
+        if (any) { matched += 1; acc += mx + tie * (sum - mx) }
+      }
+      if (matched >= mm) Some((docId, acc)) else None
+    }
+  }
+
+  test("dismax multi-field engine == driver-side brute force (qf text^1 role^2, tie, mm)") {
     val qf = Seq("text" -> 1f, "role" -> 2f)
     val (tie, mm) = (0.1f, 1)
     for (q <- Seq("user data error", "assistant spark shuffle", "tool the")) {
       val got = searcher.dismaxTopK(q, qf, tie, mm, 10)
         .collect().map(h => (h.doc_id, h.score)).toSeq
-      // brute force replicating the engine's float math exactly: same
-      // formulas (shared Bm25), same accumulation order (fields in qf
-      // order inside a term, terms in query order)
-      val rows = searcher.docs.select($"doc_id", $"role", $"text").collect()
-        .map(r => (r.getLong(0), r.getString(1), anal.analyze(r.getString(2))))
-      val n = searcher.corpus.doc_count
-      val avgdl = searcher.avgdl
-      val nc = bm25.normCache(avgdl)
-      val qterms = anal.analyze(q).toVector.distinct
-      def dfText(t: String) = rows.count(_._3.contains(t)).toLong
-      def dfRole(t: String) = rows.count(_._2 == t).toLong
-      val wIdf: Map[(String, String), Float] = (for {
-        t <- qterms
-        (f, w) <- qf
-        df = if (f == "text") dfText(t) else dfRole(t)
-        if df > 0
-      } yield (f, t) -> (w * bm25.idf(n, df))).toMap
-      val scored = rows.flatMap { case (docId, role, toks) =>
-        val norm = graft.codec.SmallFloat.intToByte4(toks.length)
-        var acc = 0f
-        var matched = 0
-        qterms.foreach { t =>
-          var mx = 0f
-          var sum = 0f
-          var any = false
-          qf.foreach { case (f, _) =>
-            wIdf.get((f, t)).foreach { wi =>
-              if (f == "text") {
-                val tf = toks.count(_ == t)
-                if (tf > 0) {
-                  val s = bm25.scoreCached(tf, norm, wi, nc)
-                  any = true; sum += s; if (s > mx) mx = s
-                }
-              } else if (role == t) {
-                val s = wi * (1f / (1f + bm25.k1))
-                any = true; sum += s; if (s > mx) mx = s
-              }
-            }
-          }
-          if (any) { matched += 1; acc += mx + tie * (sum - mx) }
-        }
-        if (matched >= mm) Some((docId, acc)) else None
-      }
-      val want = scored.sortBy { case (d, s) => (-s, d) }.take(10).toSeq
+      val want = bruteDismax(q, qf, tie, mm).sortBy { case (d, s) => (-s, d) }.take(10)
       assert(got == want, s"[$q] engine dismax diverged from brute force")
       assert(got.nonEmpty, s"[$q] dismax returned nothing")
     }
+  }
+
+  test("edismax k-boundary tie: the doubling page fetch ranks a straddling tie by external id") {
+    // external id = -internal, so the engine's internal tie-break keeps
+    // exactly the wrong members of a tie straddling the cut
+    val qf = Seq("text" -> 1f, "role" -> 2f)
+    val (q, tie, mm) = ("user data error", 0.1f, 1)
+    val ranked = bruteDismax(q, qf, tie, mm).map { case (d, s) => (-d, s) }
+      .sortBy { case (d, s) => (-s, d) }
+    // the first cut of at least 20 that falls inside a score tie
+    val n = (20 until ranked.length).find(i => ranked(i - 1)._2 == ranked(i)._2)
+      .getOrElse(fail(s"[$q] no score tie straddles any cut >= 20"))
+    def page(k: Int): Array[graft.query.Hit] =
+      searcher.dismaxTopK(q, qf, tie, mm, k).collect().map(h => h.copy(doc_id = -h.doc_id))
+    val want = ranked.take(n)
+    val single = page(n).sortBy(h => (-h.score, h.doc_id)).map(h => (h.doc_id, h.score)).toSeq
+    assert(single != want, s"[$q] cut $n: a single page already ranks right; the tie is not exercised")
+    val got = graft.ops.FtsOps.topNTieSafe(n)(page).map(h => (h.doc_id, h.score)).toSeq
+    assert(got == want, s"[$q] cut $n: tie-safe top-n diverged from brute force")
   }
 
   test("numFound: exact count matches brute force; pruned top-k == exact top-k") {
@@ -571,6 +633,9 @@ class EngineSpec extends AnyFunSuite {
       assert(pruned.hits.map(h => (h.doc_id, h.score)).toSeq ==
         exact.hits.map(h => (h.doc_id, h.score)).toSeq, s"[$q] pruned-path top-k")
       assert(pruned.totalHits <= exact.totalHits && pruned.totalHits >= pruned.hits.length)
+      // k = 0: no hits, the count k = 1 gives
+      val zero = searcher.topKWithCount(parsed, 0)
+      assert(zero.hits.isEmpty && zero.totalHits == exact.totalHits, s"[$q] k = 0")
     }
   }
 
@@ -596,7 +661,17 @@ class EngineSpec extends AnyFunSuite {
           searcher.docs.select($"doc_id", $"text", $"role", $"tool"), parsed, 12)
           .collect().map(h => (h.doc_id, h.score)).toSeq
         assert(b == oracle, s"[$q] executor-side fq path diverged from oracle")
+        assertSameCollectors(searcher, forced, parsed, q)
       }
+      assert(phraseFreqSet(searcher, Seq("the", "data"), 0) ==
+        phraseFreqSet(forced, Seq("the", "data"), 0), "phraseFreqs diverged")
+      // the broadcast DocSet keeps the one narrow stage; the executor-side
+      // DocSet rides a groupByKey exchange
+      val parsed = QueryParser.parse("role:user spark index")
+      for (ds <- Seq(searcher.topKHits(parsed, 12), searcher.matchingDocIds(parsed)))
+        assert(!hasExchange(ds), ds.queryExecution.executedPlan)
+      for (ds <- Seq(forced.topKHits(parsed, 12), forced.matchingDocIds(parsed)))
+        assert(hasExchange(ds), ds.queryExecution.executedPlan)
       // the second run of the same filter hits the fq cache's Right entry
       val again = forced.topKHits("role:user spark index", 12).collect()
       val first = searcher.topKHits("role:user spark index", 12).collect()
@@ -642,7 +717,7 @@ class EngineSpec extends AnyFunSuite {
       var after: Option[graft.query.Hit] = None
       var continue = true
       while (continue && pages.length < 20) {
-        val page = searcher.searchAfter(parsed, 5, after).collect().toSeq
+        val page = searcher.topKHits(parsed, 5, after = after).collect().toSeq
         assert(page.length <= 5, s"[$q] page overflow")
         if (page.isEmpty) continue = false
         else { pages ++= page; after = Some(page.last) }
