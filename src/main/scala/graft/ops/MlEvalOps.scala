@@ -83,7 +83,7 @@ object MlEvalOps {
               |  FROM train tr CROSS JOIN test t),
               |ranked AS (SELECT qid, label, row_number() OVER
               |    (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn FROM scored)
-              |SELECT qid, round(CAST(sum(label) AS DOUBLE) / 8, 6) AS pred
+              |SELECT qid, round(CAST(sum(label) AS DOUBLE) / count(*), 6) AS pred
               |FROM ranked WHERE rn <= 8 GROUP BY qid ORDER BY qid""".stripMargin),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -99,7 +99,7 @@ object MlEvalOps {
         scored.withColumn("rn", row_number().over(w))
           .where(col("rn") <= 8)
           .groupBy(col("qid"))
-          .agg(round(sum(col("label")).cast("double") / 8, 6).as("pred"))
+          .agg(round(sum(col("label")).cast("double") / count(lit(1)), 6).as("pred"))
           .orderBy(col("qid"))
       }),
 
@@ -206,7 +206,7 @@ object MlEvalOps {
         "before the 6-dp round. ifft is the conjugate of the same kernel " +
         "scaled by 1/N (sign-flipped sin row, same generated chain). " +
         "Scale shape: the series itself is one conditional aggregation " +
-        "over the corpus; the DFT is O(N^2) driver-free arithmetic on " +
+        "over the corpus, collected once; the DFT is O(N^2) arithmetic on " +
         "that one row",
       Some {
         val xs = (0 until 8).map(n =>
@@ -222,7 +222,8 @@ object MlEvalOps {
       (s, dir) => {
         val xs = (0 until 8).map(n =>
           sum(when(hour(col("ts")) === n, 1).otherwise(0)).cast("long").as(s"x$n"))
-        val base = t(s, dir, "events").agg(xs.head, xs.tail: _*)
+        val agg = t(s, dir, "events").agg(xs.head, xs.tail: _*)
+        val base = s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
         val bins = (0 until 8).map { k =>
           base.select(lit(k).as("k"),
             round(expr(dftChain(k, cosSym, n => s"x$n", negate = false)), 6).as("re"),

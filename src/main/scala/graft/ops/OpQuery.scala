@@ -25,13 +25,18 @@ object Op {
   /** The single source-table resolver every registry op and the index
     * build resolve their scans through — THE Iceberg swap point. Parquet
     * stands in because the zero-egress sandbox ships no Iceberg jar; on a
-    * real deployment the swap is this one line, e.g.
-    * `Op.reader = (s, cat, name) => s.read.table(s"$cat.$name")`.
+    * real deployment the swap is the one line of `parquet`, e.g.
+    * `s.read.table(s"$dir.$name")`.
     * SourceReaderSpec keeps the claim mechanically true: it swaps in a
-    * resolver for a virtual (nonexistent) dir and runs one op per family —
-    * any scan bypassing this hook dies on the missing path. */
-  @volatile var reader: (SparkSession, String, String) => DataFrame =
-    (s, dir, name) => s.read.parquet(s"$dir/$name.parquet")
+    * resolver for a virtual (nonexistent) dir via [[withReader]] and runs
+    * one op per family — any scan bypassing this hook dies on the missing
+    * path. */
+  @volatile private var reader: (SparkSession, String, String) => DataFrame = parquet
+  private def parquet(s: SparkSession, dir: String, name: String): DataFrame = s.read.parquet(s"$dir/$name.parquet")
+
+  /** Runs `body` with `fn` as the resolver, then restores the parquet one. */
+  private[graft] def withReader[T](fn: (SparkSession, String, String) => DataFrame)(body: => T): T =
+    try { reader = fn; body } finally reader = parquet
 
   /** Table reader: parquet by convention `dir/name.parquet`. */
   def t(s: SparkSession, dir: String, name: String): DataFrame =

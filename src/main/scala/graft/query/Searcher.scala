@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, IntegerType, LongType, StructField, StructType}
 import org.roaringbitmap.RoaringBitmap
 import graft.analysis.Analyzer
 import graft.index.{CorpusStats, PostingRow}
@@ -16,7 +17,8 @@ import graft.index.{CorpusStats, PostingRow}
   * (`solr/core/src/java/org/apache/solr/handler/component/QueryComponent.java:971-1060`)
   * via `orderBy(score desc, doc_id asc).limit(k)` — Spark's
   * TakeOrderedAndProject IS a per-partition heap + driver PQ merge.
-  * A second stage joins the k winners back to the stored-fields table
+  * [[search]] then fetches stored fields for just those ≤k winners with
+  * one pruned `doc_id IN (...)` read and ranks the page on the driver
   * (Solr's PURPOSE_GET_FIELDS round-trip).
   *
   * Execution shape: every query path (top-k, top-k with count, match set,
@@ -98,8 +100,10 @@ final class Searcher(
     if (cache) df.persist() else df
   }
 
-  private def postings = postingsDF
-  def docs: DataFrame = spark.read.parquet(s"$indexDir/docs")
+  /** The stored-fields table: one relation per Searcher epoch (file
+    * listing and schema resolved once, like `postingsDF`/`termsDF`), on
+    * first use, so a searcher that never fetches never pays for it. */
+  lazy val docs: DataFrame = spark.read.parquet(s"$indexDir/docs")
 
   // fq DocSet cache: per-segment filter bitmaps persist across queries
   // keyed by the canonicalized filter clause set — the reference's
@@ -130,7 +134,7 @@ final class Searcher(
   // segment_id -> first_doc, for rebasing filter bitmaps (tiny; sidecar
   // rows only — term-predicate pushdown keeps this a point read)
   private lazy val segFirstDoc: Map[Int, Long] =
-    postings.where($"term" === "")
+    postingsDF.where($"term" === "")
       .select($"segment_id", $"first_doc").as[(Int, Long)]
       .collect().toMap
 
@@ -345,7 +349,7 @@ final class Searcher(
       conjMeta.flatMap(g => g._1 ++ g._2.flatMap(_.terms))).toSeq.distinct
     // the norms sidecar rides along as the term=="" rows: one filtered scan
     // carries everything a segment needs to score itself
-    val rows = postings
+    val rows = postingsDF
       .where($"term".isin("" +: queried: _*))
       .as[PostingRow]
     Some((bcMeta, rows, fqEntry))
@@ -536,7 +540,7 @@ final class Searcher(
     val bcQ = spark.sparkContext.broadcast(
       Searcher.DisMaxMeta(termFields, nc, tie, mm, bm25.k1))
     val queried = termFields.flatten.map(_._1).distinct
-    val rows = postings
+    val rows = postingsDF
       .where($"term".isin("" +: queried: _*))
       .as[PostingRow]
     perSegment(rows, fq = null)(rs => Searcher.scoreDisMaxGroup(rs, bcQ.value, k))
@@ -552,7 +556,7 @@ final class Searcher(
     if (terms.isEmpty || terms.exists(t => dfs.getOrElse(t, 0L) == 0L))
       return spark.emptyDataset[(Long, Long)].toDF("did", "freq")
     val termsV = terms.toVector
-    val rows = postings.where($"term".isin(terms: _*)).as[PostingRow]
+    val rows = postingsDF.where($"term".isin(terms: _*)).as[PostingRow]
     perSegment(rows, fq = null) { ps =>
       val byTerm = ps.map(pr => pr.term -> pr).toMap
       if (!termsV.forall(byTerm.contains)) Iterator.empty
@@ -572,19 +576,22 @@ final class Searcher(
     }.toDF("did", "freq")
   }
 
-  /** Full search: top-k hits joined back to stored fields, ranked. */
+  /** Full search, Solr's two phases: collect the top-k hits, fetch their
+    * stored fields with one min/max-pruned `doc_id IN (...)` read, and rank
+    * the ≤k rows on the driver, dropping hits with no stored row. Columns:
+    * rank, doc_id, score, then the stored fields. */
   def search(q: String, k: Int): DataFrame = {
-    val hits = topKHits(q, k)
-    // ranks only the <=k-row hit page; pmod(doc_id,1) keeps the partition
-    // spec non-empty (one partition, BOUNDED by k — a foldable constant key
-    // would be optimized back to the unpartitioned full-sort Window shape)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pmod($"doc_id", lit(1)))
-      .orderBy($"score".desc, $"doc_id".asc)
-    hits.join(docs, "doc_id") // hits is <= k rows; Catalyst broadcasts it
-      .withColumn("rank", row_number().over(w))
-      .select($"rank", $"doc_id", $"score", $"conv_id", $"turn_idx", $"role", $"text", $"tool", $"ts")
-      .orderBy($"rank")
+    val hits = topKHits(q, k).collect()
+    val fields = docs.select($"doc_id", $"conv_id", $"turn_idx", $"role", $"text", $"tool", $"ts")
+    // an empty IN list optimizes to an empty relation: no fetch job
+    val stored = fields.where($"doc_id".isin(hits.toSeq.map(_.doc_id): _*))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val page = hits.filter(h => stored.contains(h.doc_id)).zipWithIndex.map { case (h, i) =>
+      Row.fromSeq(Seq[Any](i + 1, h.doc_id, h.score) ++ stored(h.doc_id).toSeq.tail)
+    }
+    val head = Seq("rank" -> IntegerType, "doc_id" -> LongType, "score" -> FloatType)
+      .map { case (n, t) => StructField(n, t, nullable = false) }
+    spark.createDataFrame(java.util.Arrays.asList(page: _*), StructType(head ++ fields.schema.fields.tail))
   }
 
   /** Per-segment fq DocSet bitmaps over (doc - first_doc), computed

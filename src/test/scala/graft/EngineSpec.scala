@@ -158,11 +158,92 @@ class EngineSpec extends AnyFunSuite {
     assert(searcher.termStats(Seq("the"))("the") == dfThe)
   }
 
+  /** `body`'s result and the Spark jobs it launched on this thread (counted
+    * by a job group, so other threads' jobs never count). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      Thread.sleep(1000) // let the job-start events drain
+      (r, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  private val pageSchema = {
+    import org.apache.spark.sql.types._
+    Seq("rank" -> IntegerType, "doc_id" -> LongType, "score" -> FloatType,
+      "conv_id" -> StringType, "turn_idx" -> IntegerType, "role" -> StringType,
+      "text" -> StringType, "tool" -> StringType, "ts" -> TimestampType)
+  }
+
   test("search() returns ranked stored fields") {
     val res = searcher.search("spark shuffle", 5).collect()
     assert(res.length == 5)
     assert(res.map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4, 5))
     assert(res.forall(r => r.getString(6) != null)) // text present
+    // the page == the topKHits page with ranks 1..n and the docs rows'
+    // stored fields, on several shapes
+    val stored = searcher.docs.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    for (q <- Seq("spark shuffle", "role:user spark index", "\"the data\"", "par* data")) {
+      val page = searcher.search(q, 10)
+      assert(page.schema.map(f => f.name -> f.dataType) == pageSchema, s"[$q] schema")
+      val rows = page.collect()
+      val hits = searcher.topKHits(q, 10).collect()
+      assert(rows.nonEmpty, s"[$q] expected hits")
+      assert(rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Float]("score"))).toSeq ==
+        hits.map(h => (h.doc_id, h.score)).toSeq, s"[$q] page != topKHits")
+      assert(rows.map(_.getAs[Int]("rank")).toSeq == (1 to rows.length), s"[$q] ranks")
+      rows.foreach { r =>
+        val d = stored(r.getAs[Long]("doc_id"))
+        Seq("conv_id", "turn_idx", "role", "text", "tool", "ts").foreach { c =>
+          assert(r.getAs[Any](c) == d.getAs[Any](c), s"[$q] doc ${d.getAs[Long]("doc_id")} $c")
+        }
+      }
+    }
+    // k > numFound returns numFound rows; k <= 0 an empty page, same schema
+    val rare = "w4930"
+    val n = searcher.numFound(rare)
+    assert(n > 0 && n < 10, s"'$rare' should match a few docs, matched $n")
+    assert(searcher.search(rare, 10).count() == n)
+    for (k <- Seq(0, -3)) {
+      val empty = searcher.search("spark shuffle", k)
+      assert(empty.schema.map(f => f.name -> f.dataType) == pageSchema)
+      assert(empty.collect().isEmpty)
+    }
+  }
+
+  test("search() job count: topKHits' jobs + 1 with hits, ZERO for a zero-hit or all-stopword query") {
+    val q = "error retry data"
+    searcher.search(q, 10).collect() // warm the term-stats memo
+    val (hits, topJobs) = jobsOf(searcher.topKHits(q, 10).collect())
+    val (page, searchJobs) = jobsOf(searcher.search(q, 10).collect())
+    assert(hits.nonEmpty && page.length == hits.length)
+    assert(searchJobs == topJobs + 1, s"search ran $searchJobs jobs, topKHits $topJobs")
+    val absent = "qzxqzx zqxzqx"
+    searcher.search(absent, 10) // memoize the absent terms as df = 0
+    val (none, zeroJobs) = jobsOf(searcher.search(absent, 10).collect())
+    assert(none.isEmpty && zeroJobs == 0, s"zero-hit search ran $zeroJobs jobs")
+    val stop = new Searcher(spark, indexDir, cache = false,
+      analyzer = new graft.analysis.Analyzer(Set("the", "a", "to")))
+    stop.search("the a to", 10) // resolve this epoch's docs relation
+    val (stopPage, stopJobs) = jobsOf {
+      val df = stop.search("the a to", 10)
+      (df.schema.map(f => f.name -> f.dataType), df.collect())
+    }
+    assert(stopPage._1 == pageSchema && stopPage._2.isEmpty)
+    assert(stopJobs == 0, s"all-stopword search ran $stopJobs jobs")
   }
 
   test("resume: interrupted build completes to an identical index") {

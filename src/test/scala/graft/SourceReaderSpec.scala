@@ -30,14 +30,12 @@ class SourceReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every source scan resolves through Op.reader (the Iceberg swap point)") {
     assert(!new java.io.File(virtualDir).exists(), s"$virtualDir must not exist")
-    val default = graft.ops.Op.reader
     val resolved = new java.util.concurrent.atomic.AtomicInteger
-    graft.ops.Op.reader = (s, dir, name) => {
+    graft.ops.Op.withReader { (s, dir, name) =>
       resolved.incrementAndGet()
       val real = if (dir == virtualDir) realDir else dir
       s.read.parquet(s"$real/$name.parquet")
-    }
-    try {
+    } {
       // one representative per family; each reads at least one source table
       val names = Seq(
         "agg_having",          // relational aggregation (lineitem)
@@ -56,6 +54,6 @@ class SourceReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(failures.isEmpty,
         s"ops bypassed Op.reader (or failed under it):\n${failures.mkString("\n")}")
       assert(resolved.get() > 0, "the swapped resolver was never invoked")
-    } finally graft.ops.Op.reader = default
+    }
   }
 }
