@@ -63,8 +63,10 @@ object IndexBuilder {
     * and gets wiped + rebuilt instead of resumed — resuming across a
     * schema change would poison every reader with FIELD_NOT_FOUND.
     * v3: postings carry single-token FIELD terms (`role:<v>`, `tool:<v>`)
-    * so role/tool are scored qf fields, not just filters (the copyField +
-    * per-field postings role of DocumentBuilder.java:99-123).
+    * (the copyField + per-field postings role of DocumentBuilder.java:99-123);
+    * they serve both qf scoring (dismax) and fq (role/tool filter clauses
+    * run as non-scoring cursors over them). Empty or null values get no
+    * posting.
     * v4: field-term keys are namespaced `\u0002field:value` instead of the
     * bare `field:value` — the analyzer can legally emit a colon-joined TEXT
     * token like `role:system` (UAX#29 WB6/7 MidLetter), and under v3 that
@@ -80,7 +82,7 @@ object IndexBuilder {
 
   /** Key prefix of field-term postings rows (layout v4): postings/terms rows
     * whose term starts with this are structured `field:value` terms (dismax
-    * qf scoring), not text vocabulary. */
+    * qf scoring and fq clauses), not text vocabulary. */
   val FieldTermPrefix = "\u0002"
 
   /** Index-store parquet codec. zstd, not the Spark default snappy: the
@@ -528,9 +530,9 @@ object IndexBuilder {
 
   /** One analysis + in-segment posting-build pass over segments [lo, hi):
     * a per-partition term -> PostingsBuf map (plus the "" norms-sidecar
-    * entry per segment) flushed as compressed PostingRows. Equivalent to
-    * the typed [[PostingsAggregator]] aggregation but without the exchange —
-    * every (segment, term) key is complete inside its partition. */
+    * entry per segment) flushed as compressed PostingRows through
+    * [[PostingsAggregator.finish]], with no exchange — every (segment,
+    * term) key is complete inside its partition. */
   private def buildSegments(spark: SparkSession, docs: Dataset[DocRow], dir: String,
       lo: Int, hi: Int, filterBatch: Boolean, analyzer: Analyzer): Unit = {
     import spark.implicits._
@@ -592,8 +594,8 @@ object IndexBuilder {
           lenBuf.isLenRow = true
           lenBuf.add(docId, dl, norm)
           // single-token field postings (`role:user` keying): tf = 1,
-          // norm = dl 1 — scored with the field's own stats, filtered
-          // structurally; positions are not needed (no phrases on fields)
+          // norm = dl 1 — scored with the field's own stats (qf), read
+          // unscored by fq clauses; no positions (no phrases on fields)
           if (role != null && role.nonEmpty)
             buf(seg, fieldId(roleIds, "role", role)).add(docId, 1, one)
           if (tool != null && tool.nonEmpty)

@@ -1,7 +1,5 @@
 package graft.index
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import graft.codec.PostingsCodec
 
 /** Growable primitive int buffer (no boxing — the per-token position
@@ -16,8 +14,8 @@ final class IntBuf(var a: Array[Int] = new Array[Int](4), var n: Int = 0) {
   def clear(): Unit = n = 0
 }
 
-/** Mutable accumulation buffer for one (segment, term) posting list.
-  * Kryo-encoded (opaque) — it only ever lives inside the aggregation.
+/** Mutable accumulation buffer for one (segment, term) posting list,
+  * filled by one task's in-partition build pass.
   *
   * Positions are stored FLAT: entry i owns the next tfs(i) values of `pos`,
   * in entry order. One primitive array per term instead of one small
@@ -26,7 +24,7 @@ final class IntBuf(var a: Array[Int] = new Array[Int](4), var n: Int = 0) {
   * local[16] and drove G1 into 3-18s evacuation pauses (measured 813s GC vs
   * 689s CPU on the postings stage); flat storage removes the object count
   * entirely. Either every entry of a buf carries positions or none does
-  * (the norms sidecar and the TokenRow aggregation path carry none). */
+  * (the norms sidecar and the field terms carry none). */
 final class PostingsBuf(
     var docs: Array[Long],
     var tfs: Array[Int],
@@ -36,7 +34,7 @@ final class PostingsBuf(
     var size: Int,
     var sorted: Boolean,
     var isLenRow: Boolean,
-    var hasPos: Boolean) extends Serializable {
+    var hasPos: Boolean) {
 
   def this() = this(new Array[Long](8), new Array[Int](8), new Array[Byte](8),
     new Array[Int](0), 0, 0, true, false, false)
@@ -94,29 +92,7 @@ final class PostingsBuf(
     norms = java.util.Arrays.copyOf(norms, cap)
   }
 
-  def absorb(o: PostingsBuf): PostingsBuf = {
-    if (o.size > 0) {
-      require(size == 0 || hasPos == o.hasPos,
-        "cannot merge a positional buf with a position-less one")
-      if (size + o.size > docs.length) grow(math.max(size + o.size, size * 2))
-      System.arraycopy(o.docs, 0, docs, size, o.size)
-      System.arraycopy(o.tfs, 0, tfs, size, o.size)
-      System.arraycopy(o.norms, 0, norms, size, o.size)
-      if (size > 0 && (!o.sorted || docs(size) < docs(size - 1))) sorted = false
-      else if (!o.sorted) sorted = false
-      size += o.size
-      if (o.hasPos) {
-        hasPos = true
-        if (posN + o.posN > pos.length)
-          pos = java.util.Arrays.copyOf(pos, posN + o.posN)
-        System.arraycopy(o.pos, 0, pos, posN, o.posN)
-        posN += o.posN
-      }
-    }
-    this
-  }
-
-  /** Sort by docId if out-of-order partials were merged (argsort, stable). */
+  /** Sort by docId if entries arrived out of order (argsort, stable). */
   def ensureSorted(): Unit = {
     if (!sorted) {
       val idx = Array.range(0, size).sortBy(docs(_))
@@ -145,33 +121,18 @@ final class PostingsBuf(
   }
 }
 
-/** Typed Catalyst aggregation building one compressed posting list per
-  * (segment, term) key — the Spark-native rendering of Lucene's in-RAM
-  * postings build + flush (SURVEY.md §7.2: mirrors the reference's
-  * mergeable-partials SlotAcc pattern,
-  * `solr/core/src/java/org/apache/solr/search/facet/SlotAcc.java`).
-  *
-  * Scale note: because a segment IS a Spark partition of the doc table, each
-  * (segment, term) key is completed map-side (partial aggregation), so the
-  * shuffle moves finished buffers ≈ the index itself, and a hot term's
-  * posting list is bounded by segment size — skew is capped by construction;
-  * no global per-term reduce ever materializes a 10^12-entry list. */
-object PostingsAggregator
-    extends Aggregator[TokenRow, PostingsBuf, PostingRow] {
+/** Flushes a filled [[PostingsBuf]] as one compressed posting list — the
+  * Spark-native rendering of Lucene's in-RAM postings build + flush
+  * (SURVEY.md §7.2). Both writers (the batch build and the streaming
+  * append) build each (segment, term) list inside one task; because a
+  * segment IS a Spark partition of the doc table, a hot term's posting list
+  * is bounded by segment size and no global per-term reduce ever
+  * materializes a 10^12-entry list. */
+object PostingsAggregator {
 
-  override def zero: PostingsBuf = new PostingsBuf()
-
-  override def reduce(b: PostingsBuf, r: TokenRow): PostingsBuf = {
-    if (r.term.isEmpty) b.isLenRow = true
-    b.add(r.doc_id, r.tf, r.norm); b
-  }
-
-  override def merge(a: PostingsBuf, b: PostingsBuf): PostingsBuf = {
-    a.isLenRow |= b.isLenRow
-    a.absorb(b)
-  }
-
-  override def finish(b: PostingsBuf): PostingRow = {
+  /** The buffer as a PostingRow; term/segment_id are left for the caller
+    * to fill (`withKey`). */
+  def finish(b: PostingsBuf): PostingRow = {
     b.ensureSorted()
     val docs = java.util.Arrays.copyOf(b.docs, b.size)
     val tfs = java.util.Arrays.copyOf(b.tfs, b.size)
@@ -180,14 +141,10 @@ object PostingsAggregator
     var i = 0
     while (i < b.size) { ttf += tfs(i); i += 1 }
     val firstDoc = if (b.size > 0) docs(0) else -1L
-    // term/segment_id are filled by the caller from the grouping key (withKey)
     if (b.isLenRow)
       PostingRow("", -1, b.size, ttf, firstDoc, Array.empty, norms)
     else
       PostingRow("", -1, b.size, ttf, firstDoc,
         PostingsCodec.encodeFlat(docs, tfs, norms, if (b.hasPos) b.pos else null), null)
   }
-
-  override def bufferEncoder: Encoder[PostingsBuf] = Encoders.kryo[PostingsBuf]
-  override def outputEncoder: Encoder[PostingRow] = Encoders.product[PostingRow]
 }

@@ -88,16 +88,6 @@ case class MetricsRow(
     n_postings: Long,
     finished_ts: Timestamp)
 
-/** Intermediate token row emitted by the per-partition analysis pass.
-  * `term == ""` marks the one-per-doc length row (dl in `tf`) used for the
-  * norms sidecar and corpus stats; the analyzer never emits empty tokens. */
-case class TokenRow(
-    segment_id: Int,
-    term: String,
-    doc_id: Long,
-    tf: Int,
-    norm: Byte)
-
 /** One sampled sort key of the sketch pass: murmur3 hash + the key. */
 case class SketchKey(h: Int, conv_id: String, turn_idx: Int)
 

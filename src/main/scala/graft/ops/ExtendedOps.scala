@@ -13,8 +13,7 @@ import Op.{t, dec2}
 object ExtendedOps {
 
   /** Node-count cap for broadcasting BFS frontier/visited sets; above it the
-    * iteration falls back to shuffle joins (mirrors Searcher.resolveFq's
-    * size-bounded DocSet residency). ~5M (node,dist) rows ≈ 60 MB. Tests
+    * iteration falls back to shuffle joins. ~5M (node,dist) rows ≈ 60 MB. Tests
     * override via -Dgraft.bfs.bcast.max to force the shuffle path. */
   def BfsBroadcastMaxNodes: Long =
     sys.props.get("graft.bfs.bcast.max").map(_.toLong).getOrElse(5000000L)
@@ -287,7 +286,7 @@ object ExtendedOps {
         var depth = 0
         while (depth < 3 && frontierCount > 0) {
           depth += 1
-          // size-switched joins (the resolveFq pattern): frontier/visited
+          // size-switched joins: frontier/visited
           // broadcast ONLY while node-count-bounded; visited grows
           // monotonically toward |V| — on a billion-node graph an
           // unconditional broadcast is an executor OOM, so above the cap

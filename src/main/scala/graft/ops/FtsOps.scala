@@ -295,7 +295,7 @@ object FtsOps {
   }
 
   // one Searcher per index dir per session epoch — repeated op invocations
-  // reuse its persisted postings/terms and fq DocSet caches instead of
+  // reuse its persisted postings/terms and result caches instead of
   // leaking a fresh set of persisted DataFrames each call
   private val searchers = scala.collection.mutable.Map.empty[String, Searcher]
 
@@ -1081,7 +1081,7 @@ object FtsOps {
     // The engine's BM25 scores are float32 (Lucene semantics) and can never
     // hash-match a DuckDB double — but the RANKING can (VERDICT r4 task
     // #4): each op below serves the real one-stage engine path (WAND,
-    // fq DocSets, dismax, cursorMark) and emits ONLY (rank, doc_id); the
+    // fq filter clauses, dismax, cursorMark) and emits ONLY (rank, doc_id); the
     // DuckDB twin recomputes the same ranking with the fts_bm25_oracle
     // double-BM25 machinery. EngineSpec's rank-identity fuzz is what makes
     // the float/double agreement safe to hash; these entries make it

@@ -84,7 +84,7 @@ object TextOps {
     * CORPUS, which grows linearly with corpus size, so the join carries no
     * forced broadcast hint: AQE elects broadcast while the slice fits and
     * falls back to a shuffle join when it doesn't (the same discipline as
-    * resolveFq / the BFS size switch). */
+    * the BFS size switch). */
   private def contaminationHits(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleTable(s, dir)
       .select(col("doc_id"), explode(col("sh")).as("g"))

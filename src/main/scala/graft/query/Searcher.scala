@@ -1,11 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, LongType, StructField, StructType}
-import org.roaringbitmap.RoaringBitmap
 import graft.analysis.Analyzer
 import graft.index.{CorpusStats, PostingRow}
+import graft.index.IndexBuilder.FieldTermPrefix
 
 /** Distributed top-k query engine over a built index (SURVEY.md §3.1 "Spark
   * shape"): driver parses the query and looks up exact global term stats
@@ -28,21 +28,24 @@ import graft.index.{CorpusStats, PostingRow}
   * scan provably keeps every segment inside one partition (`colocated`) the
   * stage is one narrow per-partition pass over the `term IN (...)`-filtered
   * cached postings (the norms sidecar rides along as the `term == ""`
-  * rows): no shuffle, and TakeOrdered merges on the driver. Filter (fq)
-  * DocSets are driver-collected RoaringBitmaps broadcast with the query
-  * metadata. When colocation can't be proven, or an oversized DocSet rides
-  * as rows, the same body runs after an explicit shuffle by segment_id —
-  * at 10^12-doc scale with cache=false that shuffle carries only
-  * the queried terms' rows (term-predicate pushdown on the term-sorted
+  * rows): no shuffle, and TakeOrdered merges on the driver. When
+  * colocation can't be proven the same body runs after an explicit shuffle
+  * by segment_id — at 10^12-doc scale with cache=false that shuffle carries
+  * only the queried terms' rows (term-predicate pushdown on the term-sorted
   * parquet), which is the plan a real cluster wants anyway.
+  *
+  * Filter (fq) clauses are postings clauses of that same stage, Lucene's
+  * uncached `Occur.FILTER`: a `role:`/`tool:` equality or range reads the
+  * `\u0002field:` postings as a non-scoring cursor every hit must sit on,
+  * and a negated one joins the MUST_NOT cursors (see [[prepare]]). Filters
+  * never score and never change corpus stats.
   */
 final class Searcher(
     val spark: SparkSession,
     indexDir: String,
     bm25: Bm25 = Bm25(),
     analyzer: Analyzer = Analyzer.default,
-    cache: Boolean = true,
-    fqBroadcastMaxBytes: Long = Searcher.FqBroadcastMaxBytesDefault) extends Serializable {
+    cache: Boolean = true) extends Serializable {
 
   import spark.implicits._
 
@@ -51,8 +54,8 @@ final class Searcher(
   val avgdl: Float = bm25.avgdl(corpus.sum_dl, corpus.doc_count)
 
   // With cache=true the postings and terms tables persist across queries —
-  // the searcher-epoch caching role of the reference's filter/queryResult
-  // caches (`solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:164-165`).
+  // the searcher-epoch caching role of the reference's queryResult
+  // cache (`solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:164-165`).
   // Materialization runs under a scan conf that forbids mid-file splits
   // (openCost = maxPartitionBytes = largest file) so each segment-aligned
   // postings file lands whole in one cache partition. At 10^12-doc scale
@@ -105,38 +108,12 @@ final class Searcher(
     * first use, so a searcher that never fetches never pays for it. */
   lazy val docs: DataFrame = spark.read.parquet(s"$indexDir/docs")
 
-  // fq DocSet cache: per-segment filter bitmaps persist across queries
-  // keyed by the canonicalized filter clause set — the reference's
-  // filterCache (`solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:164-165,443-450`,
-  // CaffeineCache). Entries live for the searcher epoch; bounded at
-  // FqCacheMax like the reference's cache size. A DocSet under
-  // fqBroadcastMaxBytes is driver-held and broadcast with the query
-  // metadata (Left); a bigger one stays a PERSISTED executor-side dataset
-  // of (segment_id, bitmap) rows (Right) that rides into the scoring stage
-  // like the norms sidecar — the driver never holds it.
-  private val cacheEnabled = cache
-  private type FqEntry = Either[Map[Int, Array[Byte]], Dataset[(Int, Array[Byte])]]
-  private val fqCache =
-    new java.util.concurrent.ConcurrentHashMap[Vector[String], FqEntry]()
-
   /** Drop this searcher's cached tables (end of searcher epoch). */
   def close(): Unit = if (cache) {
     postingsDF.unpersist()
     termsDF.unpersist()
-    fqCache.values().forEach {
-      case Right(ds) => ds.unpersist()
-      case _ =>
-    }
-    fqCache.clear()
     queryResultCache.clear()
   }
-
-  // segment_id -> first_doc, for rebasing filter bitmaps (tiny; sidecar
-  // rows only — term-predicate pushdown keeps this a point read)
-  private lazy val segFirstDoc: Map[Int, Long] =
-    postingsDF.where($"term" === "")
-      .select($"segment_id", $"first_doc").as[(Int, Long)]
-      .collect().toMap
 
   // per-seen-term df memo (bounded by distinct queried terms — the cached
   // term statistics of the reference's stats cache, SolrCore.java:1645-1658)
@@ -146,14 +123,14 @@ final class Searcher(
     * sorted terms table keeps this an index-like point read at scale). */
   def termStats(terms: Seq[String]): Map[String, Long] = {
     if (terms.isEmpty) return Map.empty
-    val missing = if (cacheEnabled) terms.filterNot(dfMemo.containsKey) else terms
+    val missing = if (cache) terms.filterNot(dfMemo.containsKey) else terms
     val fetched: Map[String, Long] =
       if (missing.isEmpty) Map.empty
       else termsDF
         .where($"term".isin(missing: _*))
         .select($"term", $"df").as[(String, Long)]
         .collect().toMap
-    if (cacheEnabled) {
+    if (cache) {
       // a term absent from the index memoizes as df=0
       missing.foreach(t => dfMemo.put(t, java.lang.Long.valueOf(fetched.getOrElse(t, 0L))))
       terms.map(t => t -> dfMemo.get(t).longValue).toMap.filter(_._2 > 0)
@@ -221,16 +198,44 @@ final class Searcher(
     p.copy(multiTerms = Vector.empty)
   }
 
-  /** Everything a query execution needs: the broadcast metadata, the
-    * filtered posting rows, and the fq residency decision. None = the query
-    * is provably empty without touching the postings. */
+  /** Everything a query execution needs: the broadcast metadata and the
+    * filtered posting rows. None = the query is provably empty without
+    * touching the postings.
+    *
+    * Filter (fq) clauses become postings clauses. A `role:`/`tool:` value
+    * is its `\u0002field:<v>` posting key, and a range is every such key in
+    * range, expanded exactly over the dictionary (see [[rangeKeys]]). A
+    * positive clause is a non-scoring cursor over its keys, and a negated
+    * one adds its keys to the MUST_NOT terms. Two clause kinds have no
+    * postings: `conv_id` (never indexed) and a value set holding the empty
+    * string (the writers skip ""). Those resolve through one pruned read of
+    * `docs` into sorted doc-id arrays broadcast with the metadata: no cache
+    * and no cap, so they cost 8 driver bytes per matching doc. */
   private def prepare(parsed0: ParsedQuery):
-      Option[(org.apache.spark.broadcast.Broadcast[Searcher.QueryMeta],
-        Dataset[PostingRow], FqEntry)] = {
+      Option[(org.apache.spark.broadcast.Broadcast[Searcher.QueryMeta], Dataset[PostingRow])] = {
     val parsed = expand(parsed0)
     if (parsed.isEmpty) return None
-    val dfs = termStats(parsed.allTerms)
-    val must = parsed.must.filter(t => dfs.getOrElse(t, 0L) > 0)
+    // (keys, negated) per postings fq clause; (predicate, negated) per
+    // stored-field clause — a predicate holds on the docs the clause names
+    val fieldClauses = Vector.newBuilder[(Vector[String], Boolean)]
+    val storedClauses = Vector.newBuilder[(Column, Boolean)]
+    def indexed(f: String) = f == "role" || f == "tool"
+    (parsed.filters.map((_, false)) ++ parsed.notFilters.map((_, true))).foreach {
+      case ((f, v), neg) =>
+        if (indexed(f) && v.nonEmpty) fieldClauses += ((Vector(s"$FieldTermPrefix$f:$v"), neg))
+        else storedClauses += ((col(f) === lit(v), neg))
+    }
+    parsed.rangeFilters.foreach { r =>
+      // "" lies in [lo TO hi] iff lo is "", and never in {lo TO hi}
+      if (indexed(r.field) && !(r.inclusive && r.lo.isEmpty)) fieldClauses += ((rangeKeys(r), r.negated))
+      else storedClauses += ((Searcher.inRange(col(r.field), r.lo, r.hi, r.inclusive), r.negated))
+    }
+    val fieldFilters = fieldClauses.result()
+    val dfs = termStats(parsed.allTerms ++ fieldFilters.flatMap(_._1))
+    def live(t: String) = dfs.getOrElse(t, 0L) > 0
+    // a positive filter with no live key excludes every doc
+    if (fieldFilters.exists { case (ks, neg) => !neg && !ks.exists(live) }) return None
+    val must = parsed.must.filter(live)
     if (must.length != parsed.must.length) return None // a MUST term is absent from the corpus
     val mustNotSet = parsed.mustNot.toSet
     // occur-class collisions (meta below is keyed by term, so one term gets
@@ -240,28 +245,41 @@ final class Searcher(
     if (must.exists(mustNotSet)) return None
     val mustSet = must.toSet
     val should = parsed.should
-      .filter(t => dfs.getOrElse(t, 0L) > 0)
+      .filter(live)
       .filterNot(t => mustSet(t) || mustNotSet(t))
-    val mustNot = parsed.mustNot.filter(t => dfs.getOrElse(t, 0L) > 0)
+    // negated filter keys are MUST_NOT terms (namespaced, so they collide
+    // with no text term)
+    val mustNot = (parsed.mustNot ++ fieldFilters.filter(_._2).flatMap(_._1)).filter(live)
     // a MUST phrase with a corpus-absent member can never match; SHOULD /
     // MUST_NOT phrases with dead members drop out
-    val phrasesAlive = parsed.phrases
-      .filter(_.terms.forall(t => dfs.getOrElse(t, 0L) > 0))
+    val phrasesAlive = parsed.phrases.filter(_.terms.forall(live))
     if (parsed.phrases.exists(p => p.occur == 0 && !phrasesAlive.contains(p))) return None
     // a MUST group (grouped disjunction) needs at least one live member:
     // term members with df>0, phrase members with every term live
     val groupsAlive = parsed.groups
-      .map(g => Group(g.terms.filter(t => dfs.getOrElse(t, 0L) > 0),
-        g.phrases.filter(_.terms.forall(t => dfs.getOrElse(t, 0L) > 0))))
+      .map(g => Group(g.terms.filter(live), g.phrases.filter(_.terms.forall(live))))
     if (groupsAlive.exists(g => g.terms.isEmpty && g.phrases.isEmpty)) return None
     // a conjunction group (SHOULD or MUST_NOT) with ANY dead member —
     // term or phrase — can never match; it simply drops out (optional)
     val conjAlive = parsed.conjGroups
-      .filter(g => g.terms.forall(t => dfs.getOrElse(t, 0L) > 0) &&
-        g.phrases.forall(_.terms.forall(t => dfs.getOrElse(t, 0L) > 0)))
+      .filter(g => g.terms.forall(live) && g.phrases.forall(_.terms.forall(live)))
     if (must.isEmpty && should.isEmpty && groupsAlive.isEmpty &&
       phrasesAlive.forall(_.occur == 2) && conjAlive.forall(_.occur == 2))
       return None
+    val filterKeys = fieldFilters.collect { case (ks, false) => ks.filter(live) }
+    val stored = storedClauses.result()
+    val docFilters: Vector[(Array[Long], Boolean)] =
+      if (stored.isEmpty) Vector.empty
+      else {
+        // one read for every stored-field clause: doc_id plus one flag per
+        // clause, over the rows where any flag holds (null = false)
+        val flags = stored.map(c => coalesce(c._1, lit(false)))
+        val rows = docs.where(flags.reduce(_ || _)).select(col("doc_id") +: flags: _*).collect()
+        stored.indices.map { i =>
+          (rows.filter(_.getBoolean(i + 1)).map(_.getLong(0)).sorted, stored(i)._2)
+        }.toVector
+      }
+    if (docFilters.exists { case (ds, neg) => !neg && ds.isEmpty }) return None
 
     // scoring order = MUST terms, SHOULD terms, then phrases, then groups,
     // each in query order (fixed accumulation order for bit-exact sums)
@@ -291,105 +309,47 @@ final class Searcher(
     val idfs: Map[String, Float] =
       dfs.map { case (t, df) => t -> bm25.idf(corpus.doc_count, df) }
     val nc = bm25.normCache(avgdl)
-    val hasFilter = parsed.filters.nonEmpty || parsed.notFilters.nonEmpty ||
-      parsed.rangeFilters.nonEmpty
-    val fqEntry: FqEntry =
-      if (!hasFilter) null
-      else if (!cacheEnabled)
-        resolveFq(parsed.filters, parsed.notFilters, parsed.rangeFilters)
-      else {
-        // canonical key: clause order is irrelevant to the DocSet
-        val key = (parsed.filters.map(f => s"eq:${f._1}=${f._2}") ++
-          parsed.notFilters.map(f => s"ne:${f._1}=${f._2}") ++
-          parsed.rangeFilters.map(r =>
-            s"rg:${r.field}:${r.lo}:${r.hi}:${r.inclusive}:${r.negated}")).sorted
-        // NOT computeIfAbsent: the mapping function would run multi-job
-        // Spark work inside the bin lock (blocking same-bin queries for the
-        // job's duration) and the eviction's it.remove() would mutate the
-        // map mid-compute — a CHM-contract violation that can livelock on a
-        // ReservationNode. Compute outside; racing threads may duplicate
-        // the DocSet build, the loser unpersists and adopts the winner's.
-        val cached = fqCache.get(key)
-        if (cached != null) cached
-        else {
-          val entry = resolveFq(parsed.filters, parsed.notFilters, parsed.rangeFilters)
-          // bounded like the reference's CaffeineCache filterCache
-          fqCache.synchronized {
-            while (fqCache.size >= Searcher.FqCacheMax) {
-              val it = fqCache.entrySet().iterator()
-              if (it.hasNext) {
-                it.next().getValue match {
-                  case Right(ds) => ds.unpersist()
-                  case _ =>
-                }
-                it.remove()
-              }
-            }
-          }
-          val prev = fqCache.putIfAbsent(key, entry)
-          if (prev != null) {
-            entry match {
-              case Right(ds) => ds.unpersist()
-              case _ =>
-            }
-            prev
-          } else entry
-        }
-      }
-    val fmap: Map[Int, Array[Byte]] = fqEntry match {
-      case Left(m) => m
-      case _ => null // no filter, or the DocSet rides as rows (Right)
-    }
     val bcMeta = spark.sparkContext.broadcast(
       Searcher.QueryMeta(meta, phraseMeta, groupMeta, idfs, parsed.boosts, nc,
-        fmap, hasFilter, conjMeta))
+        conjMeta, filterKeys, docFilters))
 
     val queried = (meta.keys ++ phraseMeta.flatMap(_._1) ++
       groupMeta.flatMap(g => g._1 ++ g._2.flatMap(_.terms)) ++
-      conjMeta.flatMap(g => g._1 ++ g._2.flatMap(_.terms))).toSeq.distinct
+      conjMeta.flatMap(g => g._1 ++ g._2.flatMap(_.terms)) ++
+      filterKeys.flatten).toSeq.distinct
     // the norms sidecar rides along as the term=="" rows: one filtered scan
     // carries everything a segment needs to score itself
     val rows = postingsDF
       .where($"term".isin("" +: queried: _*))
       .as[PostingRow]
-    Some((bcMeta, rows, fqEntry))
+    Some((bcMeta, rows))
   }
 
-  /** Posting rows with the fq DocSet riding along when it is executor-side
-    * (Right): one bitmap row per segment, keyed FqRowTerm — the driver
-    * never holds or broadcasts an oversized DocSet. */
-  private def rowsWithFq(rows: Dataset[PostingRow],
-      fqDs: Dataset[(Int, Array[Byte])]): Dataset[PostingRow] = {
-    val firstB = spark.sparkContext.broadcast(segFirstDoc)
-    rows.union(fqDs.map { case (seg, bytes) =>
-      PostingRow(Searcher.FqRowTerm, seg, 0, 0L,
-        firstB.value.getOrElse(seg, 0L), Array.empty, bytes)
-    })
+  /** The `\u0002field:` posting keys of the values in range `r`, read from
+    * the terms table with Spark's own string order (a shared key prefix
+    * keeps the value order). Exact: no MaxExpansions cap, since a truncated
+    * filter drops matching docs. The keys' dfs join the term-stats memo. */
+  private def rangeKeys(r: RangeFilter): Vector[String] = {
+    val p = s"$FieldTermPrefix${r.field}:"
+    val got = termsDF
+      .where($"term".startsWith(p) && Searcher.inRange($"term", p + r.lo, p + r.hi, r.inclusive))
+      .select($"term", $"df").as[(String, Long)].collect()
+    if (cache) got.foreach { case (t, df) => dfMemo.put(t, java.lang.Long.valueOf(df)) }
+    got.map(_._1).toVector
   }
 
   /** The one per-segment stage every query path runs: `body` gets one
-    * segment's rows (sidecar + queried-term rows, plus the FqRowTerm row
-    * when the DocSet rides as rows) and its output is the stage's output.
-    * The plan shape is chosen here and nowhere else:
-    *  - an executor-side DocSet (Right) rides the shuffle by segment_id
-    *    WITH that segment's queried-term rows — the shuffle moves
-    *    only queried-term postings + one bitmap row per segment, the plan a
-    *    10^12-doc cluster wants for a match-half-the-corpus fq;
-    *  - a colocated cache is one narrow stage: group the partition's rows
-    *    by segment (whole segments per partition, verified above) — no
-    *    shuffle;
-    *  - anything else shuffles by segment_id.
+    * segment's rows (sidecar + queried-term rows) and its output is the
+    * stage's output. The plan shape is chosen here and nowhere else: a
+    * colocated cache is one narrow stage that groups the partition's rows
+    * by segment (whole segments per partition, verified above) — no
+    * shuffle; anything else shuffles by segment_id.
     * `body` must reference only locals and companion functions so the task
     * closure never serializes the Searcher. */
-  private def perSegment[T: Encoder](rows: Dataset[PostingRow], fq: FqEntry)(
-      body: Array[PostingRow] => Iterator[T]): Dataset[T] = fq match {
-    case Right(fqDs) =>
-      rowsWithFq(rows, fqDs).groupByKey(_.segment_id).flatMapGroups((_, rs) => body(rs.toArray))
-    case _ if colocated =>
-      rows.mapPartitions(_.toArray.groupBy(_.segment_id).iterator.flatMap(g => body(g._2)))
-    case _ =>
-      rows.groupByKey(_.segment_id).flatMapGroups((_, rs) => body(rs.toArray))
-  }
+  private def perSegment[T: Encoder](rows: Dataset[PostingRow])(
+      body: Array[PostingRow] => Iterator[T]): Dataset[T] =
+    if (colocated) rows.mapPartitions(_.toArray.groupBy(_.segment_id).iterator.flatMap(g => body(g._2)))
+    else rows.groupByKey(_.segment_id).flatMapGroups((_, rs) => body(rs.toArray))
 
   /** @param segmentDocBudget max docs scored per segment before early
     *                         termination with best-so-far (the reference's
@@ -414,8 +374,8 @@ final class Searcher(
     if (k <= 0) return spark.emptyDataset[Hit]
     prepare(parsed0) match {
       case None => spark.emptyDataset[Hit]
-      case Some((bcMeta, rows, fqEntry)) =>
-        perSegment(rows, fqEntry) { rs =>
+      case Some((bcMeta, rows)) =>
+        perSegment(rows) { rs =>
           Searcher.scoreGroupCounted(rs, bcMeta.value, k, segmentDocBudget,
             prune = true, timeAllowedMs, after)._1.iterator
         }.orderBy($"score".desc, $"doc_id".asc).limit(k)
@@ -428,14 +388,15 @@ final class Searcher(
     * windowing = queryResultWindowSize, solrconfig.xml): k rounds up to a
     * window multiple so a k=10 page and a k=18 page share one entry, and a
     * cache hit answers WITHOUT parsing, planning, or running any Spark job
-    * (EngineSpec pins zero jobs on the hit path). Bounded like the fq
-    * cache; lives for the searcher epoch. */
+    * (EngineSpec pins zero jobs on the hit path). Bounded at
+    * QueryResultCacheMax like the reference's CaffeineCache; lives for the
+    * searcher epoch. */
   private val queryResultCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Hit]]()
 
   def topKCached(q: String, k: Int): Array[Hit] = {
     if (k <= 0) return Array.empty
-    if (!cacheEnabled) return topKHits(q, k).collect()
+    if (!cache) return topKHits(q, k).collect()
     val w = Searcher.QueryResultWindow
     val window = ((k + w - 1) / w) * w
     val key = (q, window)
@@ -445,7 +406,7 @@ final class Searcher(
       // enforce the bound under concurrent misses (size-check-then-put
       // unsynchronized would overshoot and never shrink back)
       queryResultCache.synchronized {
-        while (queryResultCache.size >= Searcher.FqCacheMax) {
+        while (queryResultCache.size >= Searcher.QueryResultCacheMax) {
           val it = queryResultCache.entrySet().iterator()
           if (it.hasNext) { it.next(); it.remove() }
         }
@@ -471,11 +432,11 @@ final class Searcher(
     val exact = minExactCount > k
     prepare(parsed0) match {
       case None => Searcher.TopDocs(Array.empty, 0L, isExact = true)
-      case Some((bcMeta, rows, fqEntry)) =>
+      case Some((bcMeta, rows)) =>
         // numSegments results: the driver PQ-merge is exactly Solr's
         // distributed-merge role (QueryComponent.java:971-1060), with the
         // same (score desc, docId asc) tie-break as TakeOrdered
-        val seg = perSegment(rows, fqEntry) { rs =>
+        val seg = perSegment(rows) { rs =>
           val (h, c) = Searcher.scoreGroupCounted(rs, bcMeta.value, k, Int.MaxValue, prune = !exact)
           Iterator.single((h.toSeq, c))
         }.collect()
@@ -494,8 +455,8 @@ final class Searcher(
   def matchingDocIds(parsed0: ParsedQuery): Dataset[Long] = {
     prepare(parsed0) match {
       case None => spark.emptyDataset[Long]
-      case Some((bcMeta, rows, fqEntry)) =>
-        perSegment(rows, fqEntry)(rs => Searcher.matchGroup(rs, bcMeta.value))
+      case Some((bcMeta, rows)) =>
+        perSegment(rows)(rs => Searcher.matchGroup(rs, bcMeta.value))
     }
   }
 
@@ -543,7 +504,7 @@ final class Searcher(
     val rows = postingsDF
       .where($"term".isin("" +: queried: _*))
       .as[PostingRow]
-    perSegment(rows, fq = null)(rs => Searcher.scoreDisMaxGroup(rs, bcQ.value, k))
+    perSegment(rows)(rs => Searcher.scoreDisMaxGroup(rs, bcQ.value, k))
       .orderBy($"score".desc, $"doc_id".asc).limit(k)
   }
 
@@ -557,7 +518,7 @@ final class Searcher(
       return spark.emptyDataset[(Long, Long)].toDF("did", "freq")
     val termsV = terms.toVector
     val rows = postingsDF.where($"term".isin(terms: _*)).as[PostingRow]
-    perSegment(rows, fq = null) { ps =>
+    perSegment(rows) { ps =>
       val byTerm = ps.map(pr => pr.term -> pr).toMap
       if (!termsV.forall(byTerm.contains)) Iterator.empty
       else {
@@ -593,76 +554,12 @@ final class Searcher(
       .map { case (n, t) => StructField(n, t, nullable = false) }
     spark.createDataFrame(java.util.Arrays.asList(page: _*), StructType(head ++ fields.schema.fields.tail))
   }
-
-  /** Per-segment fq DocSet bitmaps over (doc - first_doc), computed
-    * executor-side (the ProcessedFilter DocSet analogue —
-    * `solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:1207,1242-1250`).
-    * Filter semantics: restricts results, does NOT change corpus stats. */
-  private def fqDocSetDS(filters: Vector[(String, String)],
-      notFilters: Vector[(String, String)],
-      ranges: Vector[RangeFilter]): Dataset[(Int, Array[Byte])] = {
-    val conds = filters.map { case (f, v) => col(f) === lit(v) } ++
-      // null-safe negation: a doc with a NULL field is NOT the excluded
-      // value, so it stays in (Lucene MUST_NOT on an absent field matches)
-      notFilters.map { case (f, v) => !(col(f) <=> lit(v)) } ++
-      ranges.map { r =>
-        val in =
-          if (r.inclusive) col(r.field) >= lit(r.lo) && col(r.field) <= lit(r.hi)
-          else col(r.field) > lit(r.lo) && col(r.field) < lit(r.hi)
-        if (r.negated) !coalesce(in, lit(false)) else in
-      }
-    val cond = conds.reduce(_ && _)
-    val firstB = spark.sparkContext.broadcast(segFirstDoc)
-    docs.where(cond)
-      .select($"segment_id", $"doc_id")
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (seg, it) =>
-        val first = firstB.value(seg)
-        val bm = new RoaringBitmap()
-        it.foreach { case (_, d) => bm.add((d - first).toInt) }
-        (seg, Searcher.bitmapBytes(bm))
-      }
-  }
-
-  /** Size-bounded DocSet residency (VERDICT r2 task #5): serialized bitmaps
-    * up to fqBroadcastMaxBytes total are driver-collected and broadcast
-    * with the query metadata (RoaringBitmap ~1 bit/doc keeps typical fqs
-    * tiny); above the cap — e.g. a 50%-selectivity filter over a 10^12-doc
-    * corpus is tens of GB even run-compressed — the DocSet stays a
-    * persisted executor-side dataset joined into the scoring shuffle. */
-  private def resolveFq(filters: Vector[(String, String)],
-      notFilters: Vector[(String, String)],
-      ranges: Vector[RangeFilter]): FqEntry = {
-    val ds = fqDocSetDS(filters, notFilters, ranges).persist()
-    val totalBytes = ds.map(_._2.length.toLong).toDF("n")
-      .agg(coalesce(sum($"n"), lit(0L))).as[Long].head()
-    if (totalBytes <= fqBroadcastMaxBytes) {
-      val m = ds.collect().toMap
-      ds.unpersist()
-      Left(m)
-    } else {
-      // uncached searchers get no epoch-level unpersist hook; drop the
-      // persist immediately and let the query plan recompute the DocSet
-      if (!cacheEnabled) ds.unpersist()
-      Right(ds)
-    }
-  }
 }
 
 object Searcher {
-  /** fq DocSet cache capacity per searcher epoch (reference: bounded
-    * CaffeineCache filterCache, solrconfig.xml filterCache size). */
-  val FqCacheMax = 64
-
-  /** Default cap on driver-resident fq DocSet bytes; bigger DocSets stay
-    * executor-side (see [[Searcher#resolveFq]]). */
-  val FqBroadcastMaxBytesDefault: Long = 32L << 20
-
-  /** Sentinel term keying the fq-DocSet rows that ride the scoring shuffle
-    * (the analyzer can never emit a control character, so no
-    * collision with a real vocabulary term). */
-  val FqRowTerm = "\u0001fq"
+  /** queryResultCache capacity per searcher epoch (reference: bounded
+    * CaffeineCache, solrconfig.xml queryResultCache size). */
+  val QueryResultCacheMax = 64
 
   /** Multi-term expansion cap (the reference's BooleanQuery clause limit
     * role, solrconfig.xml maxBooleanClauses). */
@@ -708,8 +605,9 @@ object Searcher {
   }
 
   /** Everything a task needs to score one segment: term metadata, phrase /
-    * group clauses, idf + boost maps, the norm decode cache, and (if the
-    * query is filtered) the per-segment DocSet bitmaps. */
+    * group clauses, idf + boost maps, the norm decode cache, and the
+    * query's positive fq clauses (negated field keys ride in `meta` as
+    * MUST_NOT terms). */
   final case class QueryMeta(
       meta: Map[String, (Int, Int)], // term -> (queryPos, occur 0=must 1=should 2=not)
       phraseMeta: Vector[(Vector[String], Int, Int, Int)], // (terms, occur, queryPos, slop)
@@ -717,24 +615,21 @@ object Searcher {
       idfs: Map[String, Float],
       boosts: Map[String, Float],
       normCache: Array[Float],
-      fmap: Map[Int, Array[Byte]], // null when !hasFilter OR the DocSet rides as FqRowTerm rows
-      hasFilter: Boolean,
-      conjMeta: Vector[(Vector[String], Vector[GroupPhrase], Int, Int)] =
-        Vector.empty) // (terms, phrase members, occur 1|2, queryPos)
+      conjMeta: Vector[(Vector[String], Vector[GroupPhrase], Int, Int)], // (terms, phrase members, occur 1|2, queryPos)
+      filters: Vector[Vector[String]], // positive fq clauses: a doc must hold one of each clause's keys
+      docFilters: Vector[(Array[Long], Boolean)]) // stored-field fq clauses: (sorted doc ids, negated)
 
   /** Cursor construction shared by the scoring path and the DocSet
-    * (match-enumeration) path: (should, must, not, sidecar, filter), or
+    * (match-enumeration) path: (should, must, not, sidecar, filters), or
     * None when the segment provably matches nothing (no sidecar, or a MUST
-    * clause absent here). */
+    * or positive filter clause absent here). */
   private[query] def buildCursors(rs: Array[PostingRow], qm: QueryMeta):
-      Option[(Array[Cursor], Array[Cursor], Array[Cursor], PostingRow, Option[RoaringBitmap])] = {
+      Option[(Array[Cursor], Array[Cursor], Array[Cursor], PostingRow, Array[Cursor])] = {
     val sidecarIdx = rs.indexWhere(_.term.isEmpty)
     if (sidecarIdx < 0) return None // no sidecar ⇒ nothing to score
     val sc = rs(sidecarIdx)
     def wIdf(t: String): Float = qm.boosts.getOrElse(t, 1f) * qm.idfs(t)
-    val byTerm = rs.iterator
-      .filter(pr => pr.term.nonEmpty && pr.term != FqRowTerm)
-      .map(pr => pr.term -> pr).toMap
+    val byTerm = rs.iterator.filter(_.term.nonEmpty).map(pr => pr.term -> pr).toMap
     val nc = qm.normCache
     // fresh member cursors (cursors are stateful; a term used both
     // standalone and inside a phrase needs independent iterators); phrase
@@ -800,22 +695,24 @@ object Searcher {
         if (occ == 1) shouldCur += cc else notCur += cc
       }
     }
-    if (missingMust) None // a MUST clause can't match here
-    else {
-      val filter: Option[RoaringBitmap] =
-        if (!qm.hasFilter) None
-        else if (qm.fmap != null) qm.fmap.get(sc.segment_id) match {
-          case Some(raw) => Some(bitmapFrom(raw))
-          case None => Some(new RoaringBitmap()) // filter matches nothing here
-        }
-        else rs.find(_.term == FqRowTerm) match { // DocSet rode the shuffle
-          case Some(r) => Some(bitmapFrom(r.norms))
-          case None => Some(new RoaringBitmap()) // filter matches nothing here
-        }
-      Some((shouldCur.sortBy(_.queryPos).toArray,
-        mustCur.sortBy(_.queryPos).toArray,
-        notCur.toArray, sc, filter))
+    // positive fq clauses: one non-scoring cursor each, over the clause's
+    // keys present in this segment; a clause with none matches nothing here
+    val filterCur = scala.collection.mutable.ArrayBuffer.empty[Cursor]
+    qm.filters.foreach { keys =>
+      keys.flatMap(byTerm.get).map(pr => new PostingCursor(pr.blocks, 0f, nc, 0): Cursor) match {
+        case Vector() => missingMust = true
+        case Vector(c) => filterCur += c
+        case cs => filterCur += new DisjunctionCursor(cs.toArray, 0)
+      }
     }
+    qm.docFilters.foreach { case (docs, negated) =>
+      val c = new DocArrayCursor(docs)
+      if (negated) notCur += c else filterCur += c
+    }
+    if (missingMust) None // a MUST or filter clause can't match here
+    else Some((shouldCur.sortBy(_.queryPos).toArray,
+      mustCur.sortBy(_.queryPos).toArray,
+      notCur.toArray, sc, filterCur.toArray))
   }
 
   /** Score one segment's rows (sidecar row + queried-term rows): its top-k
@@ -835,12 +732,12 @@ object Searcher {
       after: Option[Hit] = None): (Array[Hit], Long) =
     buildCursors(rs, qm) match {
       case None => (Array.empty, 0L)
-      case Some((should, must, not, sc, filter)) =>
+      case Some((should, must, not, sc, filters)) =>
         val deadlineNs =
           if (timeAllowedMs == Long.MaxValue) Long.MaxValue
           else System.nanoTime() + timeAllowedMs * 1000000L
         Wand.scoreSegmentCounted(should, must, not,
-          sc.norms, sc.first_doc, filter, k, docBudget, prune, deadlineNs,
+          sc.norms, sc.first_doc, filters, k, docBudget, prune, deadlineNs,
           after.fold(Float.NaN)(_.score), after.fold(-1L)(_.doc_id))
     }
 
@@ -850,9 +747,13 @@ object Searcher {
   private[query] def matchGroup(rs: Array[PostingRow], qm: QueryMeta): Iterator[Long] =
     buildCursors(rs, qm) match {
       case None => Iterator.empty
-      case Some((should, must, not, sc, filter)) =>
-        Wand.enumerateMatches(should, must, not, sc.first_doc, filter)
+      case Some((should, must, not, _, filters)) =>
+        Wand.enumerateMatches(should, must, not, filters)
     }
+
+  /** `c` in [lo, hi] (inclusive) or (lo, hi), in Spark's string order. */
+  private[query] def inRange(c: Column, lo: String, hi: String, inclusive: Boolean): Column =
+    if (inclusive) c >= lit(lo) && c <= lit(hi) else c > lit(lo) && c < lit(hi)
 
   /** Anchored Java regex equivalent of a Lucene wildcard glob: `*` = any
     * run, `?` = any single char, everything else literal. */
@@ -889,18 +790,5 @@ object Searcher {
       i += 1
     }
     prev(b.length) <= maxEdits
-  }
-
-  private[query] def bitmapBytes(bm: RoaringBitmap): Array[Byte] = {
-    bm.runOptimize()
-    val buf = new java.io.ByteArrayOutputStream()
-    bm.serialize(new java.io.DataOutputStream(buf))
-    buf.toByteArray
-  }
-
-  private[query] def bitmapFrom(bytes: Array[Byte]): RoaringBitmap = {
-    val bm = new RoaringBitmap()
-    bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
-    bm
   }
 }

@@ -2,10 +2,10 @@ package graft.query
 
 import graft.codec.{Block, PostingsCodec}
 import graft.index.PostingRow
-import org.roaringbitmap.RoaringBitmap
 
 /** Doc-at-a-time scorer interface consumed by [[Wand]]: a single term's
-  * postings ([[PostingCursor]]) or a positional phrase ([[PhraseCursor]]). */
+  * postings ([[PostingCursor]]), a positional phrase ([[PhraseCursor]]),
+  * or a sorted docId array ([[DocArrayCursor]]). */
 trait Cursor {
   def doc: Long
   def advanceTo(target: Long): Long
@@ -426,6 +426,32 @@ final class ConjunctionCursor(
     if (doc == Long.MaxValue) doc else align(doc + 1)
 }
 
+/** A non-scoring cursor over a sorted docId array: the filter clauses
+  * postings cannot answer (`conv_id`, which has no postings, and a value
+  * set holding the empty string, which the writers never index) — see
+  * Searcher.prepare. */
+final class DocArrayCursor(docs: Array[Long]) extends Cursor {
+  private var i = 0
+  var doc: Long = if (docs.isEmpty) Long.MaxValue else docs(0)
+
+  def advanceTo(target: Long): Long = {
+    if (doc >= target) return doc
+    i = java.util.Arrays.binarySearch(docs, i, docs.length, target)
+    if (i < 0) i = -i - 1
+    doc = if (i < docs.length) docs(i) else Long.MaxValue
+    doc
+  }
+
+  def next(): Long = if (doc == Long.MaxValue) doc else advanceTo(doc + 1)
+
+  def score(norm: Byte): Float = 0f
+  val maxScore: Float = 0f
+  def shallowTo(target: Long): Unit = ()
+  def blockMaxScore: Float = 0f
+  def blockLastDoc: Long = Long.MaxValue
+  val queryPos: Int = 0
+}
+
 final case class Hit(doc_id: Long, score: Float)
 
 /** Bounded top-k heap ordered worst-first by (score asc, docId desc) so the
@@ -474,9 +500,11 @@ final class TopK(k: Int, afterScore: Float = Float.NaN, afterDoc: Long = -1L) {
 }
 
 /** Per-segment scoring: block-max WAND for disjunctions, leapfrog
-  * intersection for conjunctions, both with optional NOT terms and an
-  * optional filter bitmap (the fq DocSet analogue —
-  * `solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:1207,1242-1250`). */
+  * intersection for conjunctions, both with optional NOT cursors and
+  * optional filter cursors — the fq clauses, run like Lucene's uncached
+  * `Occur.FILTER` clause (`solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:1207,1242-1250`):
+  * a candidate doc must sit on every filter cursor, and filters never
+  * score, so the score sums and the plan choice are the unfiltered ones. */
 object Wand {
 
   /** Score one segment: its top-k hits plus its scored-doc count — the numFound /
@@ -493,7 +521,8 @@ object Wand {
     * @param must      MUST cursors (query order); empty if pure disjunction
     * @param mustNot   cursors whose docs are excluded
     * @param norms     segment norms blob, indexed by (doc - firstDoc)
-    * @param filter    optional allowed-docs bitmap over (doc - firstDoc)
+    * @param filters   non-scoring cursors a doc must match, all of them
+    *                   (positive fq clauses); empty = unfiltered
     * @param docBudget max docs SCORED in this segment before terminating
     *                   early with the best-so-far — the deterministic
     *                   rendering of the reference's query limits
@@ -518,7 +547,7 @@ object Wand {
       mustNot: Array[Cursor],
       norms: Array[Byte],
       firstDoc: Long,
-      filter: Option[RoaringBitmap],
+      filters: Array[Cursor],
       k: Int,
       docBudget: Int = Int.MaxValue,
       prune: Boolean = true,
@@ -528,8 +557,8 @@ object Wand {
     val top = new TopK(k, afterScore, afterDoc)
     val budget = new Budget(docBudget, deadlineNs)
     val counter = new Counter
-    if (must.nonEmpty) conjunction(must, should, mustNot, norms, firstDoc, filter, top, budget, counter)
-    else if (should.nonEmpty) bmw(should, mustNot, norms, firstDoc, filter, top, budget, counter, prune)
+    if (must.nonEmpty) conjunction(must, should, mustNot, norms, firstDoc, filters, top, budget, counter)
+    else if (should.nonEmpty) bmw(should, mustNot, norms, firstDoc, filters, top, budget, counter, prune)
     (top.results, counter.n)
   }
 
@@ -542,8 +571,7 @@ object Wand {
       should: Array[Cursor],
       must: Array[Cursor],
       mustNot: Array[Cursor],
-      firstDoc: Long,
-      filter: Option[RoaringBitmap]): Iterator[Long] = {
+      filters: Array[Cursor]): Iterator[Long] = {
     // materialized per segment, like the reference's DocSet (a RoaringBitmap
     // over doc-first would be the compressed variant; plain longs keep the
     // downstream join typed)
@@ -560,7 +588,7 @@ object Wand {
           else i += 1
         }
         if (agreed) {
-          if (allowed(target, firstDoc, filter, mustNot)) out += target
+          if (allowed(target, filters, mustNot)) out += target
           target += 1
         }
         if (target == Long.MaxValue) done = true
@@ -569,7 +597,7 @@ object Wand {
       val dis = new DisjunctionView(should)
       var d = dis.doc
       while (d != Long.MaxValue) {
-        if (allowed(d, firstDoc, filter, mustNot)) out += d
+        if (allowed(d, filters, mustNot)) out += d
         d = dis.next()
       }
     }
@@ -672,10 +700,16 @@ object Wand {
     top.results // unreachable
   }
 
-  private def allowed(doc: Long, firstDoc: Long, filter: Option[RoaringBitmap],
-      mustNot: Array[Cursor]): Boolean = {
-    if (filter.exists(f => !f.contains((doc - firstDoc).toInt))) return false
+  /** True iff `doc` sits on every filter cursor and on no MUST_NOT cursor;
+    * callers ask in ascending doc order, so each cursor only moves forward. */
+  private def allowed(doc: Long, filters: Array[Cursor], mustNot: Array[Cursor]): Boolean = {
     var i = 0
+    while (i < filters.length) {
+      if (filters(i).doc < doc) filters(i).advanceTo(doc)
+      if (filters(i).doc != doc) return false
+      i += 1
+    }
+    i = 0
     while (i < mustNot.length) {
       if (mustNot(i).doc < doc) mustNot(i).advanceTo(doc)
       if (mustNot(i).doc == doc) return false
@@ -706,7 +740,7 @@ object Wand {
       mustNot: Array[Cursor],
       norms: Array[Byte],
       firstDoc: Long,
-      filter: Option[RoaringBitmap],
+      filters: Array[Cursor],
       top: TopK,
       budget: Budget,
       counter: Counter,
@@ -767,7 +801,7 @@ object Wand {
         // all cursors [0..p] are at or before pivot; bring them to pivot
         i = 0
         while (i <= p) { if (cursors(i).doc < pivot) cursors(i).advanceTo(pivot); i += 1 }
-        if (allowed(pivot, firstDoc, filter, mustNot)) {
+        if (allowed(pivot, filters, mustNot)) {
           if (!budget.spend()) return // early termination: budget exhausted
           counter.n += 1
           val norm = norms((pivot - firstDoc).toInt)
@@ -795,7 +829,7 @@ object Wand {
       mustNot: Array[Cursor],
       norms: Array[Byte],
       firstDoc: Long,
-      filter: Option[RoaringBitmap],
+      filters: Array[Cursor],
       top: TopK,
       budget: Budget,
       counter: Counter): Unit = {
@@ -810,7 +844,7 @@ object Wand {
         else i += 1
       }
       if (agreed) {
-        if (allowed(target, firstDoc, filter, mustNot)) {
+        if (allowed(target, filters, mustNot)) {
           if (!budget.spend()) return // early termination: budget exhausted
           counter.n += 1
           var j = 0

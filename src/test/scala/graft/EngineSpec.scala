@@ -27,6 +27,8 @@ class EngineSpec extends AnyFunSuite {
     dir
   }
   private lazy val searcher = new Searcher(spark, indexDir)
+  // cache = false: the groupByKey plan, shared by the cross-path tests
+  private lazy val fallback = new Searcher(spark, indexDir, cache = false)
 
   // FIXTURES.md §3 golden query set (q01-q10 categories)
   private val goldenQueries = Seq(
@@ -235,6 +237,15 @@ class EngineSpec extends AnyFunSuite {
     searcher.search(absent, 10) // memoize the absent terms as df = 0
     val (none, zeroJobs) = jobsOf(searcher.search(absent, 10).collect())
     assert(none.isEmpty && zeroJobs == 0, s"zero-hit search ran $zeroJobs jobs")
+    // a filter this searcher has not run before, its key's df memoized,
+    // costs exactly the unfiltered topKHits' jobs: it is a postings clause
+    searcher.termStats(Seq(IndexBuilder.FieldTermPrefix + "tool:bash"))
+    val (filtered, fqJobs) = jobsOf(searcher.topKHits(s"tool:bash $q", 10).collect())
+    assert(filtered.nonEmpty && fqJobs == topJobs, s"fq topKHits ran $fqJobs jobs, topKHits $topJobs")
+    val noRole = "role:nosuchrole data"
+    searcher.topKHits(noRole, 10).collect() // memoize the absent key as df = 0
+    val (noneRole, noRoleJobs) = jobsOf(searcher.topKHits(noRole, 10).collect())
+    assert(noneRole.isEmpty && noRoleJobs == 0, s"absent-filter topKHits ran $noRoleJobs jobs")
     val stop = new Searcher(spark, indexDir, cache = false,
       analyzer = new graft.analysis.Analyzer(Set("the", "a", "to")))
     stop.search("the a to", 10) // resolve this epoch's docs relation
@@ -537,7 +548,6 @@ class EngineSpec extends AnyFunSuite {
     // per-segment bodies but differ in partitioning, filter-map delivery,
     // and merge shape —
     // identical (doc_id, score) ranking is the contract
-    val fallback = new Searcher(spark, indexDir, cache = false)
     assert(!fallback.usesColocatedPath)
     for (q <- goldenQueries) {
       val parsed = searcher.expand(QueryParser.parse(q))
@@ -720,45 +730,43 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("oversized fq DocSets ride the scoring shuffle: forced executor-side path == broadcast path") {
-    // fqBroadcastMaxBytes = 0 forces EVERY filter DocSet onto the
-    // rides-as-rows path (the 10^12-doc behavior for a half-the-corpus fq,
-    // where driver residency would be tens of GB); results must be
-    // identical to the driver-broadcast path AND the oracle
-    val forced = new Searcher(spark, indexDir, fqBroadcastMaxBytes = 0L)
-    try {
-      val filtered = Seq(
-        "role:user spark index",          // ~50% selectivity filter
-        "role:assistant error retry",
-        "role:[system TO user] data",     // range filter (matches most docs)
-        "role:user tool:grep data",       // conjunctive filters
-        "role:nosuchrole data")           // filter matches nothing
-      for (q <- filtered) {
-        val parsed = QueryParser.parse(q)
-        val a = searcher.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
-        val b = forced.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
-        assert(a == b, s"[$q] executor-side fq path diverged from broadcast path")
-        val oracle = Oracle.topK(spark,
-          searcher.docs.select($"doc_id", $"text", $"role", $"tool"), parsed, 12)
-          .collect().map(h => (h.doc_id, h.score)).toSeq
-        assert(b == oracle, s"[$q] executor-side fq path diverged from oracle")
-        assertSameCollectors(searcher, forced, parsed, q)
-      }
-      assert(phraseFreqSet(searcher, Seq("the", "data"), 0) ==
-        phraseFreqSet(forced, Seq("the", "data"), 0), "phraseFreqs diverged")
-      // the broadcast DocSet keeps the one narrow stage; the executor-side
-      // DocSet rides a groupByKey exchange
-      val parsed = QueryParser.parse("role:user spark index")
+  test("fq clauses are postings: cached == cache=false == oracle") {
+    // role/tool filters run as non-scoring cursors over the field postings,
+    // conv_id filters over a stored-field doc-id read; both plan shapes
+    // must agree with each other AND the oracle
+    val convs = searcher.docs.select($"conv_id").distinct().orderBy($"conv_id").as[String].collect()
+    val c0 = searcher.search("data", 1).collect().head.getAs[String]("conv_id")
+    val c1 = convs(math.min(convs.indexOf(c0) + 5, convs.length - 1))
+    val filtered = Seq(
+      "role:user spark index",          // ~50% selectivity filter
+      "role:assistant error retry",
+      "role:[system TO user] data",     // range filter (matches most docs)
+      "role:user tool:grep data",       // conjunctive filters
+      "role:nosuchrole data",           // filter matches nothing
+      "data -role:system",              // negated filter
+      "error -role:[system TO user]",   // negated range filter
+      "role:{assistant TO user} data",  // exclusive range filter
+      s"conv_id:$c0 data",              // stored-field filter
+      s"data -conv_id:$c0",             // negated stored-field filter
+      s"conv_id:[$c0 TO $c1] data")     // stored-field range filter
+    for (q <- filtered) {
+      val parsed = QueryParser.parse(q)
+      val a = searcher.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
+      val b = fallback.topKHits(parsed, 12).collect().map(h => (h.doc_id, h.score)).toSeq
+      assert(a == b, s"[$q] cached fq path diverged from the cache=false path")
+      val oracle = Oracle.topK(spark,
+        searcher.docs.select($"doc_id", $"text", $"role", $"tool", $"conv_id"), parsed, 12)
+        .collect().map(h => (h.doc_id, h.score)).toSeq
+      assert(a == oracle, s"[$q] fq path diverged from oracle")
+      if (q.startsWith("conv_id")) assert(a.nonEmpty, s"[$q] expected hits")
+      assertSameCollectors(searcher, fallback, parsed, q)
+    }
+    // a filtered query keeps the one narrow stage on the cached searcher
+    for (q <- Seq("role:user spark index", s"conv_id:$c0 data")) {
+      val parsed = QueryParser.parse(q)
       for (ds <- Seq(searcher.topKHits(parsed, 12), searcher.matchingDocIds(parsed)))
         assert(!hasExchange(ds), ds.queryExecution.executedPlan)
-      for (ds <- Seq(forced.topKHits(parsed, 12), forced.matchingDocIds(parsed)))
-        assert(hasExchange(ds), ds.queryExecution.executedPlan)
-      // the second run of the same filter hits the fq cache's Right entry
-      val again = forced.topKHits("role:user spark index", 12).collect()
-      val first = searcher.topKHits("role:user spark index", 12).collect()
-      assert(again.map(h => (h.doc_id, h.score)).toSeq ==
-        first.map(h => (h.doc_id, h.score)).toSeq)
-    } finally forced.close()
+    }
   }
 
   test("general wildcard: ?/infix-*/leading-* expansion matches brute force; rank-identical") {
@@ -900,7 +908,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("concurrent queries on one searcher epoch == sequential (8 threads, mixed shapes)") {
     // the reference's SolrIndexSearcher is shared by all request threads;
-    // our epoch caches (postings persist, fqCache, dfMemo, queryResultCache)
+    // our epoch caches (postings persist, dfMemo, queryResultCache)
     // must tolerate the same concurrency
     val qs = Seq("the data", "+query merge", "error -timeout", "role:user spark index",
       "\"the data\"", "par* data", "errer~1 data", "timeout retry commit")
@@ -1024,7 +1032,10 @@ class EngineSpec extends AnyFunSuite {
       graft.index.Turn("c0", 0, "assistant", "the deploy emitted role:assistant twice role:assistant", null, ts),
       graft.index.Turn("c0", 1, "user", "plain text without the marker", null, ts),
       graft.index.Turn("c1", 0, "assistant", "another assistant turn about deploy", null, ts),
-      graft.index.Turn("c1", 1, "system", "role:assistant appears in system text", null, ts))
+      graft.index.Turn("c1", 1, "system", "role:assistant appears in system text", null, ts),
+      // an empty role gets no field posting: its filters take the
+      // stored-field route
+      graft.index.Turn("c2", 0, "", "deploy notes under an empty role", null, ts))
     val dir = TestSpark.tmpDir("idx-collide")
     IndexBuilder.build(spark, turns.toDF(), dir, IndexBuilder.Config(numSegments = 2))
     val s = new Searcher(spark, dir)
@@ -1039,9 +1050,16 @@ class EngineSpec extends AnyFunSuite {
     val engine = s.topKHits(parsed, 10).collect()
     val oracle = Oracle.topK(spark,
       s.docs.select($"doc_id", $"text", $"role", $"tool"), parsed, 10).collect()
-    assert(engine.length == oracle.length && engine.length == 3)
+    assert(engine.length == oracle.length && engine.length == 4) // docs 0, 2, 3, 4
     engine.zip(oracle).foreach { case (e, o) =>
       assert(e.doc_id == o.doc_id && e.score == o.score)
+    }
+    // `role:` filters on the empty value: keep only doc 4, or drop it
+    for ((q, n) <- Seq("role: deploy" -> 1, "deploy -role:" -> 2)) {
+      val p = QueryParser.parse(q)
+      val got = s.topKHits(p, 10).collect()
+      val want = Oracle.topK(spark, s.docs.select($"doc_id", $"text", $"role", $"tool"), p, 10).collect()
+      assert(got.length == n && got.toSeq == want.toSeq, s"[$q] engine != oracle")
     }
     // the dismax qf path still reaches the FIELD posting via the namespace
     val dm = s.dismaxTopK("assistant", Seq("role" -> 1f), tie = 0f, mm = 1, k = 10).collect()
