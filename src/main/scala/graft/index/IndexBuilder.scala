@@ -1,6 +1,7 @@
 package graft.index
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,12 +31,22 @@ import graft.codec.SmallFloat
   *   metrics/   MetricsRow parquet — per-segment build metrics (docs, dl
   *              sum, vocabulary, posting entries; north-rule metrics table)
   *   lineage/   LineageRow parquet — completed steps, for resume
+  *   staging/   a step's output before it is promoted (empty once committed)
   *
   * Resumability (north rule): the build is decomposed into steps
-  * ("docs", "batch-i", "stats"); each step is an idempotent Spark job whose
-  * output commits atomically (parquet job commit) before its lineage row is
-  * appended. Re-running `build` skips steps already in lineage — the
-  * tlog-replay analogue (`solr/core/src/java/org/apache/solr/update/UpdateLog.java:1401-1443`).
+  * ("docs", "batch-<b>", "stats"), each committed by appending its lineage
+  * row; re-running `build` skips steps already in lineage — the tlog-replay
+  * analogue (`solr/core/src/java/org/apache/solr/update/UpdateLog.java:1401-1443`).
+  * "docs" and "stats" overwrite their tables, so a re-run replaces them. A
+  * postings batch commits by the streaming appender's rule (Lucene's commit
+  * point: files no lineage row references are garbage): it writes to
+  * `staging/batch-<b>/`, [[promote]]s the files into postings/ under the
+  * `batch-<b>-` prefix, then appends its row. A resume first clears the
+  * prefix of every batch it re-runs, so a build killed between promote and
+  * row resumes to an identical index instead of doubling that batch's
+  * postings. A completed batch whose recorded segment range is not the one
+  * this run plans for it fails the build (IllegalStateException) rather
+  * than leave segments without postings.
   */
 object IndexBuilder {
 
@@ -47,15 +58,14 @@ object IndexBuilder {
   case class BuildResult(docCount: Long, sumDl: Long, numSegments: Int, resumedSteps: Int)
 
   /** Case-sensitive set of finished lineage steps (empty if no index yet). */
-  def completedSteps(spark: SparkSession, dir: String): Set[String] = {
-    import spark.implicits._
-    if (!exists(spark, s"$dir/lineage")) Set.empty
-    else spark.read.parquet(s"$dir/lineage").select("step").as[String].collect().toSet
-  }
+  def completedSteps(spark: SparkSession, dir: String): Set[String] =
+    lineageRows(spark, dir).map(_.step).toSet
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  private def lineageRows(spark: SparkSession, dir: String): Array[LineageRow] = {
+    import spark.implicits._
+    val p = new Path(s"$dir/lineage")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Array.empty
+    else spark.read.parquet(p.toString).as[LineageRow].collect()
   }
 
   /** On-disk layout version; bump on PostingRow/Block schema changes. An
@@ -95,15 +105,15 @@ object IndexBuilder {
 
   def build(spark: SparkSession, turns: DataFrame, dir: String, cfg: Config = Config()): BuildResult = {
     import spark.implicits._
-    val fsRoot = new org.apache.hadoop.fs.Path(dir)
+    val fsRoot = new Path(dir)
     val fs = fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/layout-v$LayoutVersion")
+    val marker = new Path(s"$dir/layout-v$LayoutVersion")
     if (fs.exists(fsRoot) && !fs.exists(marker)) fs.delete(fsRoot, true)
     fs.mkdirs(fsRoot)
     if (!fs.exists(marker)) fs.create(marker).close()
-    val done = completedSteps(spark, dir)
+    val lineage = lineageRows(spark, dir)
+    val done = lineage.map(_.step).toSet
     var skipped = 0
-
 
     // ---- step 1: docId assignment (two-pass, no global window, no cache) -
     //
@@ -135,7 +145,7 @@ object IndexBuilder {
       val prevScanOpen = spark.conf.get("spark.sql.files.openCostInBytes")
       val srcBytes = turns.inputFiles.headOption.map { _ =>
         turns.inputFiles.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
+          val p = new Path(f)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .getFileStatus(p).getLen
         }.sum
@@ -159,7 +169,7 @@ object IndexBuilder {
       // table into a pure map job (no 100-TB exchange), which is also why
       // its per-stage cost scales near-linearly with executors.
       val fastSegs: Option[(Int, Long)] =
-        if (srcBytes <= 0 || sys.env.contains("GRAFT_NO_FASTPATH")) None
+        if (srcBytes <= 0) None
         else {
           // split sizing targets segment count (≈ max(numSegments, 2 slots/
           // core) one-file-per-task postings parallelism), not shuffle spill
@@ -317,55 +327,37 @@ object IndexBuilder {
     }
 
     // ---- step 2: postings, one batch of segments at a time --------------
-    // Sourced from the committed docs parquet WITHOUT a shuffle: pass B's
-    // range partitioning already wrote segment-aligned files (equal `seg`
-    // values land in one range partition, so every file holds only whole
-    // segments, rows doc_id-ascending). The per-partition posting build
-    // keys buffers by (segment, term), so a task holding several whole
-    // segments is fine — but a task holding a FRAGMENT of a segment is not
-    // (it would emit duplicate (segment, term) rows and a torn norms
-    // sidecar). Guard: cap parquet split size at the largest docs file so
-    // Spark can never split one file across tasks; one task ≈ one file
-    // keeps parallelism = numSegments. (The r1 build re-shuffled the whole
-    // corpus here — the dominant non-compute cost in the scaling bench.)
-    // NOTE: reusing the in-memory pre-write pass-B plan instead is a
-    // measured 5x pessimization — every downstream task closure then drags
-    // the cached upstream lineage (with per-relation serialized Hadoop
-    // Configurations) through (de)serialization.
-    def source: Dataset[DocRow] = spark.read.parquet(s"$dir/docs").as[DocRow]
-
-    val docsPath = new org.apache.hadoop.fs.Path(s"$dir/docs")
-    val docsFs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val maxDocsFile = docsFs.listStatus(docsPath)
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen)
-      .foldLeft(1L)(math.max)
-    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (maxDocsFile + 1).toString)
-    // openCost = split cap: otherwise Spark PACKS 2+ small docs files into
-    // one task (measured: 128 segment files -> 64 tasks -> 4 uneven waves
-    // at 16 slots, ~28% idle tail on the dominant stage). One file per task
-    // keeps postings parallelism = numSegments exactly.
-    spark.conf.set("spark.sql.files.openCostInBytes", (maxDocsFile + 1).toString)
+    // Each batch runs the shared segment writer over the committed docs and
+    // commits under its `batch-<b>-` prefix (see the header).
     val perBatch = math.max(1, math.ceil(segSpace.toDouble / cfg.batches).toInt)
+    val plan: Map[String, (Int, Int)] = (0 until cfg.batches).map { b =>
+      val lo = b * perBatch
+      s"batch-$b" -> ((lo, math.min(segSpace, lo + perBatch)))
+    }.filter { case (_, (lo, hi)) => lo < hi }.toMap
+    lineage.filter(_.step.startsWith("batch-")).foreach { r =>
+      val planned = plan.get(r.step)
+      if (!planned.contains((r.segment_lo, r.segment_hi)))
+        throw new IllegalStateException(s"$dir: completed step ${r.step} covers segments " +
+          s"[${r.segment_lo}, ${r.segment_hi}) but this build plans " +
+          planned.fold("no such batch") { case (lo, hi) => s"[$lo, $hi)" } +
+          " for it; rebuild into a fresh directory")
+    }
     val analyzer = new Analyzer(cfg.stopwords)
-    try {
-      for (b <- 0 until cfg.batches) {
-        val lo = b * perBatch
-        val hi = math.min(segSpace, lo + perBatch)
-        if (lo < hi) {
-          if (done(s"batch-$b")) skipped += 1
-          else {
-            val t0 = System.nanoTime()
-            buildSegments(spark, source, dir, lo, hi, cfg.batches > 1, analyzer)
-            appendLineage(spark, dir, LineageRow(s"batch-$b", lo, hi, 0L, 0L,
-              (System.nanoTime() - t0) / 1000000, now()))
-          }
-        }
+    val postingsDir = new Path(s"$dir/postings")
+    for (b <- 0 until cfg.batches; (lo, hi) <- plan.get(s"batch-$b")) {
+      if (done(s"batch-$b")) skipped += 1
+      else {
+        val t0 = System.nanoTime()
+        val prefix = s"batch-$b-"
+        val staged = new Path(s"$dir/staging/batch-$b")
+        deletePrefixed(fs, postingsDir, prefix)
+        writeSegments(spark, s"$dir/docs", staged.toString, analyzer,
+          if (cfg.batches > 1) Some((lo, hi)) else None)
+        promote(fs, staged, postingsDir, prefix)
+        appendLineage(spark, dir, LineageRow(s"batch-$b", lo, hi, 0L, 0L,
+          (System.nanoTime() - t0) / 1000000, now()))
+        fs.delete(staged, true)
       }
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
     }
 
     // ---- step 3: exact global stats --------------------------------------
@@ -374,20 +366,8 @@ object IndexBuilder {
       val t0 = System.nanoTime()
       val postings = spark.read.parquet(s"$dir/postings")
         .select($"segment_id", $"term", $"doc_count", $"ttf").persist()
-      // per-partition metrics table (north rule) off the SAME cached scan:
-      // norms rows (term=="") carry the segment's doc count / dl sum, real
-      // rows its vocabulary and posting-entry counts
-      val tsNow = now()
-      postings
-        .groupBy($"segment_id")
-        .agg(
-          sum(when($"term" === "", $"doc_count").otherwise(0L)).cast("long").as("n_docs"),
-          sum(when($"term" === "", $"ttf").otherwise(0L)).cast("long").as("sum_dl"),
-          sum(when($"term" =!= "", 1L).otherwise(0L)).cast("long").as("n_terms"),
-          sum(when($"term" =!= "", $"doc_count").otherwise(0L)).cast("long").as("n_postings"))
-        .withColumn("finished_ts", lit(tsNow))
-        .as[MetricsRow]
-        .write.mode("overwrite").parquet(s"$dir/metrics")
+      // per-partition metrics table (north rule) off the SAME cached scan
+      segmentMetrics(postings, now()).write.mode("overwrite").parquet(s"$dir/metrics")
       postings.where($"term" =!= "")
         .groupBy($"term")
         .agg(sum($"doc_count").cast("long").as("df"), sum($"ttf").as("ttf"))
@@ -528,121 +508,191 @@ object IndexBuilder {
     Some((ordered.length, acc))
   }
 
-  /** One analysis + in-segment posting-build pass over segments [lo, hi):
-    * a per-partition term -> PostingsBuf map (plus the "" norms-sidecar
-    * entry per segment) flushed as compressed PostingRows through
-    * [[PostingsAggregator.finish]], with no exchange — every (segment,
-    * term) key is complete inside its partition. */
-  private def buildSegments(spark: SparkSession, docs: Dataset[DocRow], dir: String,
-      lo: Int, hi: Int, filterBatch: Boolean, analyzer: Analyzer): Unit = {
+  /** The one segment writer, shared by the build and the streaming appender:
+    * one analysis + in-segment posting-build pass over the DocRow parquet in
+    * `docsDir` (only segments [lo, hi) when `range` is given), written to
+    * `outDir` as PostingRows sorted by (term, segment). A per-partition
+    * term -> PostingsBuf map (plus the "" norms-sidecar entry per segment) is
+    * flushed through [[PostingsAggregator.finish]] with no exchange — every
+    * (segment, term) key is complete inside its partition.
+    *
+    * That holds only while no task reads a FRAGMENT of a segment (it would
+    * emit duplicate (segment, term) rows and a torn norms sidecar). Both
+    * writers of docs parquet keep segments whole per file (the build's pass B
+    * partitions on the segment, the fast path writes one segment per split,
+    * an append one file per batch), so the guard caps parquet split
+    * size at the largest docs file: Spark can never split one file across
+    * tasks, and one task ≈ one file keeps parallelism = segment count. (The
+    * r1 build re-shuffled the whole corpus here — the dominant non-compute
+    * cost in the scaling bench.) Reading the committed parquet rather than
+    * reusing the in-memory pass-B plan is deliberate: the latter is a
+    * measured 5x pessimization — every downstream task closure then drags
+    * the cached upstream lineage (with per-relation serialized Hadoop
+    * Configurations) through (de)serialization. */
+  private[graft] def writeSegments(spark: SparkSession, docsDir: String, outDir: String,
+      analyzer: Analyzer, range: Option[(Int, Int)] = None): Unit = {
     import spark.implicits._
-    val in = if (filterBatch) docs.where($"segment_id" >= lo && $"segment_id" < hi) else docs
-    val rows: Dataset[PostingRow] = in
-      .select($"doc_id", $"segment_id", $"text", $"role", $"tool")
-      .as[(Long, Int, String, String, String)]
-      .mapPartitions { it =>
-        // Allocation-rate discipline (the postings stage is GC-bound at 16
-        // slots — measured 70s GC / 410s task time before this shape, and
-        // still 51s/250s with String-keyed interning): terms intern to
-        // DENSE PER-TASK INT IDS via slice probes that allocate NO String
-        // per occurrence (TokenDict — each distinct term materializes once
-        // per task), and each segment holds a flat id-indexed PostingsBuf
-        // array — no Tuple2 key, no per-(doc, term) scratch buffer, no
-        // per-doc HashMap, no per-token String: occurrences append
-        // incrementally (PostingsBuf.addOcc).
-        val dict = new graft.analysis.TokenDict()
-        val sink = new graft.analysis.TokenSink()
-        val emitter = new analyzer.IdEmitter(dict, sink)
-        def idOf(t: String): Int = dict.idOf(t)
-        // per-segment id-indexed buffers; tasks see one segment in practice
-        // (one task per segment-aligned docs file), so the outer map is hit
-        // through a single-entry cache
-        val segBufs = new java.util.HashMap[Integer, java.util.ArrayList[PostingsBuf]]()
-        var curSeg = Int.MinValue
-        var curArr: java.util.ArrayList[PostingsBuf] = null
-        def buf(seg: Int, id: Int): PostingsBuf = {
-          if (seg != curSeg) {
-            curArr = segBufs.get(seg)
-            if (curArr == null) { curArr = new java.util.ArrayList[PostingsBuf](); segBufs.put(seg, curArr) }
-            curSeg = seg
+    val docsPath = new Path(docsDir)
+    val maxDocsFile = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(docsPath)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen)
+      .foldLeft(1L)(math.max)
+    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (maxDocsFile + 1).toString)
+    // openCost = split cap: otherwise Spark PACKS 2+ small docs files into
+    // one task (measured: 128 segment files -> 64 tasks -> 4 uneven waves
+    // at 16 slots, ~28% idle tail on the dominant stage)
+    spark.conf.set("spark.sql.files.openCostInBytes", (maxDocsFile + 1).toString)
+    try {
+      val docs = spark.read.parquet(docsDir)
+      val in = range.fold(docs) { case (lo, hi) => docs.where($"segment_id" >= lo && $"segment_id" < hi) }
+      val rows: Dataset[PostingRow] = in
+        .select($"doc_id", $"segment_id", $"text", $"role", $"tool")
+        .as[(Long, Int, String, String, String)]
+        .mapPartitions { it =>
+          // Allocation-rate discipline (the postings stage is GC-bound at 16
+          // slots — measured 70s GC / 410s task time before this shape, and
+          // still 51s/250s with String-keyed interning): terms intern to
+          // DENSE PER-TASK INT IDS via slice probes that allocate NO String
+          // per occurrence (TokenDict — each distinct term materializes once
+          // per task), and each segment holds a flat id-indexed PostingsBuf
+          // array — no Tuple2 key, no per-(doc, term) scratch buffer, no
+          // per-doc HashMap, no per-token String: occurrences append
+          // incrementally (PostingsBuf.addOcc).
+          val dict = new graft.analysis.TokenDict()
+          val sink = new graft.analysis.TokenSink()
+          val emitter = new analyzer.IdEmitter(dict, sink)
+          def idOf(t: String): Int = dict.idOf(t)
+          // per-segment id-indexed buffers; tasks see one segment in practice
+          // (one task per segment-aligned docs file), so the outer map is hit
+          // through a single-entry cache
+          val segBufs = new java.util.HashMap[Integer, java.util.ArrayList[PostingsBuf]]()
+          var curSeg = Int.MinValue
+          var curArr: java.util.ArrayList[PostingsBuf] = null
+          def buf(seg: Int, id: Int): PostingsBuf = {
+            if (seg != curSeg) {
+              curArr = segBufs.get(seg)
+              if (curArr == null) { curArr = new java.util.ArrayList[PostingsBuf](); segBufs.put(seg, curArr) }
+              curSeg = seg
+            }
+            while (curArr.size() <= id) curArr.add(null)
+            var b = curArr.get(id)
+            if (b == null) { b = new PostingsBuf(); curArr.set(id, b) }
+            b
           }
-          while (curArr.size() <= id) curArr.add(null)
-          var b = curArr.get(id)
-          if (b == null) { b = new PostingsBuf(); curArr.set(id, b) }
-          b
-        }
-        val one = SmallFloat.intToByte4(1) // field norm: single-token dl
-        val lenId = idOf("") // norms sidecar = id 0
-        // role/tool field-term ids memoized per VALUE (skips the per-doc
-        // string concat + dict probe; role/tool cardinality is tiny)
-        val roleIds = new java.util.HashMap[String, Integer]()
-        val toolIds = new java.util.HashMap[String, Integer]()
-        def fieldId(cache: java.util.HashMap[String, Integer], field: String, v: String): Int = {
-          val got = cache.get(v)
-          if (got != null) got.intValue()
-          else {
-            val id = idOf(FieldTermPrefix + field + ":" + v)
-            cache.put(v, Integer.valueOf(id))
-            id
-          }
-        }
-        it.foreach { case (docId, seg, text, role, tool) =>
-          analyzer.analyzeIdsInto(text, emitter)
-          val dl = sink.n
-          val norm = SmallFloat.intToByte4(dl)
-          val lenBuf = buf(seg, lenId)
-          lenBuf.isLenRow = true
-          lenBuf.add(docId, dl, norm)
-          // single-token field postings (`role:user` keying): tf = 1,
-          // norm = dl 1 — scored with the field's own stats (qf), read
-          // unscored by fq clauses; no positions (no phrases on fields)
-          if (role != null && role.nonEmpty)
-            buf(seg, fieldId(roleIds, "role", role)).add(docId, 1, one)
-          if (tool != null && tool.nonEmpty)
-            buf(seg, fieldId(toolIds, "tool", tool)).add(docId, 1, one)
-          var i = 0
-          while (i < sink.n) {
-            buf(seg, sink.ids(i)).addOcc(docId, norm, sink.poss(i))
-            i += 1
-          }
-        }
-        // emit in (term, segment) order SORTED IN-TASK: rows flow straight to
-        // the parquet writer with tight row-group stats for term pushdown,
-        // WITHOUT a sortWithinPartitions — Spark's sorter would buffer a
-        // second, full copy of the compressed segment per task (measured as
-        // half the postings stage's live heap at local[16]). Each buf is
-        // dropped from its slot as it is consumed, so peak memory is the raw
-        // accumulation buffers alone.
-        val keys = {
-          val ks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (seg, id)
-          val si = segBufs.entrySet().iterator()
-          while (si.hasNext) {
-            val e = si.next()
-            val arr = e.getValue
-            var id = 0
-            while (id < arr.size()) {
-              if (arr.get(id) != null) ks += ((e.getKey.intValue(), id))
-              id += 1
+          val one = SmallFloat.intToByte4(1) // field norm: single-token dl
+          val lenId = idOf("") // norms sidecar = id 0
+          // role/tool field-term ids memoized per VALUE (skips the per-doc
+          // string concat + dict probe; role/tool cardinality is tiny)
+          val roleIds = new java.util.HashMap[String, Integer]()
+          val toolIds = new java.util.HashMap[String, Integer]()
+          def fieldId(cache: java.util.HashMap[String, Integer], field: String, v: String): Int = {
+            val got = cache.get(v)
+            if (got != null) got.intValue()
+            else {
+              val id = idOf(FieldTermPrefix + field + ":" + v)
+              cache.put(v, Integer.valueOf(id))
+              id
             }
           }
-          ks.toArray
-        }
-        java.util.Arrays.sort(keys, Ordering.by((k: (Int, Int)) => (dict.term(k._2), k._1)))
-        new Iterator[PostingRow] {
-          var i = 0
-          def hasNext = i < keys.length
-          def next() = {
-            val (seg, id) = keys(i)
-            i += 1
-            val arr = segBufs.get(seg)
-            val b = arr.get(id)
-            arr.set(id, null)
-            PostingsAggregator.finish(b).withKey(seg, dict.term(id))
+          it.foreach { case (docId, seg, text, role, tool) =>
+            analyzer.analyzeIdsInto(text, emitter)
+            val dl = sink.n
+            val norm = SmallFloat.intToByte4(dl)
+            val lenBuf = buf(seg, lenId)
+            lenBuf.isLenRow = true
+            lenBuf.add(docId, dl, norm)
+            // single-token field postings (`role:user` keying): tf = 1,
+            // norm = dl 1 — scored with the field's own stats (qf), read
+            // unscored by fq clauses; no positions (no phrases on fields)
+            if (role != null && role.nonEmpty)
+              buf(seg, fieldId(roleIds, "role", role)).add(docId, 1, one)
+            if (tool != null && tool.nonEmpty)
+              buf(seg, fieldId(toolIds, "tool", tool)).add(docId, 1, one)
+            var i = 0
+            while (i < sink.n) {
+              buf(seg, sink.ids(i)).addOcc(docId, norm, sink.poss(i))
+              i += 1
+            }
+          }
+          // emit in (term, segment) order SORTED IN-TASK: rows flow straight to
+          // the parquet writer with tight row-group stats for term pushdown,
+          // WITHOUT a sortWithinPartitions — Spark's sorter would buffer a
+          // second, full copy of the compressed segment per task (measured as
+          // half the postings stage's live heap at local[16]). Each buf is
+          // dropped from its slot as it is consumed, so peak memory is the raw
+          // accumulation buffers alone.
+          val keys = {
+            val ks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (seg, id)
+            val si = segBufs.entrySet().iterator()
+            while (si.hasNext) {
+              val e = si.next()
+              val arr = e.getValue
+              var id = 0
+              while (id < arr.size()) {
+                if (arr.get(id) != null) ks += ((e.getKey.intValue(), id))
+                id += 1
+              }
+            }
+            ks.toArray
+          }
+          java.util.Arrays.sort(keys, Ordering.by((k: (Int, Int)) => (dict.term(k._2), k._1)))
+          new Iterator[PostingRow] {
+            var i = 0
+            def hasNext = i < keys.length
+            def next() = {
+              val (seg, id) = keys(i)
+              i += 1
+              val arr = segBufs.get(seg)
+              val b = arr.get(id)
+              arr.set(id, null)
+              PostingsAggregator.finish(b).withKey(seg, dict.term(id))
+            }
           }
         }
-      }
-    rows.write.mode("append").option("compression", Zstd).parquet(s"$dir/postings")
+      rows.write.mode("overwrite").option("compression", Zstd).parquet(outDir)
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+    }
   }
+
+  /** Per-segment metrics rows (north-rule metrics table) from postings rows
+    * with `segment_id`, `term`, `doc_count` and `ttf`: norms rows
+    * (term == "") carry a segment's doc count and dl sum, real rows its
+    * vocabulary and posting-entry counts. One row per segment present. */
+  private[graft] def segmentMetrics(postings: DataFrame, ts: Timestamp): Dataset[MetricsRow] = {
+    import postings.sparkSession.implicits._
+    postings
+      .groupBy($"segment_id")
+      .agg(
+        sum(when($"term" === "", $"doc_count").otherwise(0L)).cast("long").as("n_docs"),
+        sum(when($"term" === "", $"ttf").otherwise(0L)).cast("long").as("sum_dl"),
+        sum(when($"term" =!= "", 1L).otherwise(0L)).cast("long").as("n_terms"),
+        sum(when($"term" =!= "", $"doc_count").otherwise(0L)).cast("long").as("n_postings"))
+      .withColumn("finished_ts", lit(ts))
+      .as[MetricsRow]
+  }
+
+  /** Commit-rule step: move a staged parquet dir's data files into `dst`
+    * under `<prefix><original-name>` — deterministic names, so files an
+    * interrupted commit promoted are found again by prefix. */
+  private[graft] def promote(fs: FileSystem, src: Path, dst: Path, prefix: String): Unit = {
+    fs.mkdirs(dst)
+    fs.listStatus(src).foreach { st =>
+      val n = st.getPath.getName
+      if (n.endsWith(".parquet"))
+        fs.rename(st.getPath, new Path(dst, prefix + n))
+    }
+  }
+
+  /** Commit-rule cleanup: delete `dir`'s files promoted under `prefix`. */
+  private[graft] def deletePrefixed(fs: FileSystem, dir: Path, prefix: String): Unit =
+    if (fs.exists(dir))
+      fs.listStatus(dir).foreach { st =>
+        if (st.getPath.getName.startsWith(prefix)) fs.delete(st.getPath, false)
+      }
 
   private def now() = new Timestamp(System.currentTimeMillis())
 

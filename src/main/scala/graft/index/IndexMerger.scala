@@ -61,10 +61,9 @@ object IndexMerger {
       .sortWithinPartitions($"term", $"segment_id")
       .write.mode("overwrite").option("compression", IndexBuilder.Zstd).parquet(s"$outDir/postings")
 
-    // docs must carry the SAME segment remap as postings: the searcher's fq
-    // DocSet path groups docs by segment_id and joins it against the merged
-    // norms sidecar's segment_id — stale ids silently drop filtered matches
-    // (and streaming appends would collide baseSeg with old doc segments).
+    // docs must carry the SAME segment remap as postings: streaming appends
+    // allocate the next segment id as corpus.num_segments, so a doc left on
+    // an old, larger id would collide with a later appended segment.
     spark.read.parquet(s"$indexDir/docs").as[DocRow]
       .map(d => d.copy(segment_id = remap(d.segment_id)))
       .write.mode("overwrite").option("compression", IndexBuilder.Zstd).parquet(s"$outDir/docs")
@@ -73,20 +72,12 @@ object IndexMerger {
     // corpus records the new segment count
     spark.read.parquet(s"$indexDir/terms").write.mode("overwrite").parquet(s"$outDir/terms")
 
-    // per-segment metrics recomputed from the MERGED postings (same shape
-    // as the builder's stats step). Summing the source metrics rows would
+    // per-segment metrics recomputed from the MERGED postings by the
+    // build's own aggregation. Summing the source metrics rows would
     // over-count n_terms: a term in several merged-away segments is one
     // vocabulary entry of the merged segment, not k.
-    val tsNow = new java.sql.Timestamp(System.currentTimeMillis())
-    spark.read.parquet(s"$outDir/postings")
-      .groupBy($"segment_id")
-      .agg(
-        sum(when($"term" === "", $"doc_count").otherwise(0L)).cast("long").as("n_docs"),
-        sum(when($"term" === "", $"ttf").otherwise(0L)).cast("long").as("sum_dl"),
-        sum(when($"term" =!= "", 1L).otherwise(0L)).cast("long").as("n_terms"),
-        sum(when($"term" =!= "", $"doc_count").otherwise(0L)).cast("long").as("n_postings"))
-      .withColumn("finished_ts", lit(tsNow))
-      .as[MetricsRow]
+    IndexBuilder.segmentMetrics(spark.read.parquet(s"$outDir/postings"),
+      new java.sql.Timestamp(System.currentTimeMillis()))
       .write.mode("overwrite").parquet(s"$outDir/metrics")
     val c = spark.read.parquet(s"$indexDir/corpus").as[CorpusStats].head()
     Seq(c.copy(num_segments = target)).toDS()

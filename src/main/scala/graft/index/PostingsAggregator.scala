@@ -2,18 +2,6 @@ package graft.index
 
 import graft.codec.PostingsCodec
 
-/** Growable primitive int buffer (no boxing — the per-token position
-  * accumulation sits on the indexing hot path). */
-final class IntBuf(var a: Array[Int] = new Array[Int](4), var n: Int = 0) {
-  def add(v: Int): Unit = {
-    if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
-    a(n) = v
-    n += 1
-  }
-  def toArray: Array[Int] = java.util.Arrays.copyOf(a, n)
-  def clear(): Unit = n = 0
-}
-
 /** Mutable accumulation buffer for one (segment, term) posting list,
   * filled by one task's in-partition build pass.
   *
@@ -47,29 +35,13 @@ final class PostingsBuf(
     size += 1
   }
 
-  /** Append one entry whose positions are `positions.a[0, positions.n)`
-    * (tf = positions.n) — reads the caller's scratch IntBuf directly, no
-    * per-entry array materialization. */
-  def addPos(doc: Long, norm: Byte, positions: IntBuf): Unit = {
-    require(size == 0 || hasPos, "mixing positional entries into a position-less buf")
-    hasPos = true
-    if (size == docs.length) grow(size * 2)
-    if (sorted && size > 0 && docs(size - 1) > doc) sorted = false
-    docs(size) = doc; tfs(size) = positions.n; norms(size) = norm
-    size += 1
-    if (posN + positions.n > pos.length)
-      pos = java.util.Arrays.copyOf(pos, math.max(posN + positions.n, math.max(16, pos.length * 2)))
-    System.arraycopy(positions.a, 0, pos, posN, positions.n)
-    posN += positions.n
-  }
-
   /** Append ONE token occurrence: if `doc` is already the last entry, bump
     * its tf and append the position; otherwise open a new entry. The
-    * segment-build pass feeds each doc's occurrences consecutively in
-    * ascending position order, so this accumulates exactly what
-    * [[addPos]] built from a per-(doc, term) scratch buffer — without
-    * allocating that buffer per (doc, term) pair (~10 per doc; the
-    * allocation-rate driver of the postings stage's GC share at 16 slots). */
+    * segment writer ([[IndexBuilder.writeSegments]]) feeds each doc's
+    * occurrences consecutively in ascending position order, so each entry
+    * ends up with tf = its position count and its positions in order — with
+    * no per-(doc, term) scratch buffer (~10 per doc; the allocation-rate
+    * driver of the postings stage's GC share at 16 slots). */
   def addOcc(doc: Long, norm: Byte, position: Int): Unit = {
     require(size == 0 || hasPos, "mixing positional entries into a position-less buf")
     hasPos = true
@@ -123,11 +95,12 @@ final class PostingsBuf(
 
 /** Flushes a filled [[PostingsBuf]] as one compressed posting list — the
   * Spark-native rendering of Lucene's in-RAM postings build + flush
-  * (SURVEY.md §7.2). Both writers (the batch build and the streaming
-  * append) build each (segment, term) list inside one task; because a
-  * segment IS a Spark partition of the doc table, a hot term's posting list
-  * is bounded by segment size and no global per-term reduce ever
-  * materializes a 10^12-entry list. */
+  * (SURVEY.md §7.2). The one segment writer ([[IndexBuilder.writeSegments]],
+  * run by both the batch build and the streaming append) builds each
+  * (segment, term) list inside one task; because a segment IS a Spark
+  * partition of the doc table, a hot term's posting list is bounded by
+  * segment size and no global per-term reduce ever materializes a
+  * 10^12-entry list. */
 object PostingsAggregator {
 
   /** The buffer as a PostingRow; term/segment_id are left for the caller

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.sql.Timestamp
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 import graft.analysis.Analyzer
-import graft.codec.SmallFloat
 import graft.index._
 
 /** Incremental index maintenance over a transcript stream — the engine's
@@ -18,6 +18,10 @@ import graft.index._
   *     commit visibility = here, the promote of a batch's staged files);
   *   - docIds continue densely from the current corpus count in arrival
   *     order — matching Lucene/Solr append semantics;
+  *   - the segment's postings and metrics row come from the build's own
+  *     segment writer ([[IndexBuilder.writeSegments]]) and metrics
+  *     aggregation ([[IndexBuilder.segmentMetrics]]), run over the staged
+  *     batch docs — one indexing chain for build and append;
   *   - exact global term stats are refreshed per batch by merging the
   *     batch's DELTA df/ttf into the terms table (ExactStatsCache
   *     semantics) — an O(vocabulary) job, independent of index size;
@@ -26,7 +30,8 @@ import graft.index._
   *
   * Exactly-once under replay (crash at ANY point):
   *   1. batch output is computed in `staging/<batchId>/` and promoted into
-  *      docs/ and postings/ under deterministic `b<batchId>-` file names;
+  *      docs/, postings/ and metrics/ under deterministic `b<batchId>-` file
+  *      names (the build's commit rule, [[IndexBuilder.promote]]);
   *   2. before merging stats, the pre-batch terms/ and corpus/ dirs are
   *      renamed to `*.base.<batchId>` snapshots; the merged tables are
   *      written fresh, then the lineage row commits the batch;
@@ -41,6 +46,7 @@ object StreamingIndexer {
       batchId: Long, analyzer: Analyzer = Analyzer.default): Unit = {
     import spark.implicits._
     val step = s"stream-batch-$batchId"
+    val prefix = s"b$batchId-"
     val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val termsBase = new Path(s"$indexDir/terms.base.$batchId")
     val corpusBase = new Path(s"$indexDir/corpus.base.$batchId")
@@ -61,9 +67,8 @@ object StreamingIndexer {
       fs.delete(new Path(s"$indexDir/corpus"), true)
       fs.rename(corpusBase, new Path(s"$indexDir/corpus"))
     }
-    deletePrefixed(fs, new Path(s"$indexDir/docs"), s"b$batchId-")
-    deletePrefixed(fs, new Path(s"$indexDir/postings"), s"b$batchId-")
-    deletePrefixed(fs, new Path(s"$indexDir/metrics"), s"b$batchId-")
+    val tables = Seq("docs", "postings", "metrics")
+    tables.foreach(t => IndexBuilder.deletePrefixed(fs, new Path(s"$indexDir/$t"), prefix))
     fs.delete(staging, true)
 
     val hasIndex = fs.exists(new Path(s"$indexDir/corpus"))
@@ -95,57 +100,10 @@ object StreamingIndexer {
           d
         }
       }
-      .write.mode("overwrite").option("compression", graft.index.IndexBuilder.Zstd).parquet(s"$staging/docs")
+      .write.mode("overwrite").option("compression", IndexBuilder.Zstd).parquet(s"$staging/docs")
 
-    // ---- stage postings from the staged docs (batch-sized read) ---------
-    val stagedDocs = spark.read.parquet(s"$staging/docs")
-      .select($"doc_id", $"text", $"role", $"tool").as[(Long, String, String, String)]
-    stagedDocs.mapPartitions { it =>
-      val bufs = new java.util.HashMap[String, PostingsBuf]()
-      def buf(term: String): PostingsBuf = {
-        var b = bufs.get(term)
-        if (b == null) { b = new PostingsBuf(); bufs.put(term, b) }
-        b
-      }
-      val one = SmallFloat.intToByte4(1)
-      val tp = new java.util.HashMap[String, IntBuf]()
-      it.foreach { case (docId, text, role, tool) =>
-        val (terms, tposs) = analyzer.analyzeWithPositions(text)
-        val dl = terms.length
-        val norm = SmallFloat.intToByte4(dl)
-        val lenBuf = buf("")
-        lenBuf.isLenRow = true
-        lenBuf.add(docId, dl, norm)
-        // same namespaced single-token field postings as the batch builder
-        // (layout v4: \u0002-prefixed keys, disjoint from text vocabulary)
-        if (role != null && role.nonEmpty)
-          buf(graft.index.IndexBuilder.FieldTermPrefix + "role:" + role).add(docId, 1, one)
-        if (tool != null && tool.nonEmpty)
-          buf(graft.index.IndexBuilder.FieldTermPrefix + "tool:" + tool).add(docId, 1, one)
-        tp.clear()
-        var i = 0
-        while (i < terms.length) {
-          val t = terms(i)
-          var l = tp.get(t)
-          if (l == null) { l = new IntBuf(); tp.put(t, l) }
-          l.add(tposs(i))
-          i += 1
-        }
-        val ts = tp.entrySet().iterator()
-        while (ts.hasNext) {
-          val e = ts.next()
-          buf(e.getKey).addPos(docId, norm, e.getValue)
-        }
-      }
-      val out = bufs.entrySet().iterator()
-      new Iterator[PostingRow] {
-        def hasNext = out.hasNext
-        def next() = {
-          val e = out.next()
-          PostingsAggregator.finish(e.getValue).withKey(baseSeg, e.getKey)
-        }
-      }
-    }.write.mode("overwrite").option("compression", graft.index.IndexBuilder.Zstd).parquet(s"$staging/postings")
+    // ---- stage postings with the build's segment writer (batch-sized read)
+    IndexBuilder.writeSegments(spark, s"$staging/docs", s"$staging/postings", analyzer)
 
     // ---- batch delta stats (O(batch); materialized BEFORE promote moves
     // the staged files away) -----------------------------------------------
@@ -153,28 +111,18 @@ object StreamingIndexer {
     stagedPostings.where($"term" =!= "")
       .select($"term", $"doc_count".cast("long").as("df"), $"ttf")
       .write.mode("overwrite").parquet(s"$staging/delta")
-    // per-partition metrics row for the appended segment (north-rule
-    // metrics table; same shape as the batch builder's stats-step rows).
-    // Staged + promoted under the batch's deterministic prefix like
-    // docs/postings, so a crashed-then-replayed batch never duplicates it.
-    // ONE conditional-agg pass splits the norms rows (term == "": docs/dl)
-    // from the postings rows (terms/entries) — two separate jobs here were
-    // a per-trigger read tax on the append hot path
-    val (batchDocs, batchDl, batchTerms, batchPostings) = stagedPostings
-      .agg(
-        coalesce(sum(when($"term" === "", $"doc_count")), lit(0L)).cast("long"),
-        coalesce(sum(when($"term" === "", $"ttf")), lit(0L)).cast("long"),
-        count(when($"term" =!= "", 1)).cast("long"),
-        coalesce(sum(when($"term" =!= "", $"doc_count")), lit(0L)).cast("long"))
-      .as[(Long, Long, Long, Long)].head()
-    Seq(graft.index.MetricsRow(baseSeg, batchDocs, batchDl, batchTerms,
-      batchPostings, new java.sql.Timestamp(System.currentTimeMillis())))
-      .toDS().coalesce(1).write.mode("overwrite").parquet(s"$staging/metrics")
+    // the appended segment's metrics row, which also carries the batch
+    // totals for corpus/; an empty batch still gets a zero row, so the
+    // segment stays visible to MergePolicy's planning
+    val ts = new Timestamp(System.currentTimeMillis())
+    val metrics = IndexBuilder.segmentMetrics(stagedPostings, ts).collect().headOption
+      .getOrElse(MetricsRow(baseSeg, 0L, 0L, 0L, 0L, ts))
+    Seq(metrics).toDS().coalesce(1).write.mode("overwrite").parquet(s"$staging/metrics")
 
     // ---- promote staged files under deterministic names -----------------
-    promote(fs, new Path(s"$staging/docs"), new Path(s"$indexDir/docs"), s"b$batchId-")
-    promote(fs, new Path(s"$staging/postings"), new Path(s"$indexDir/postings"), s"b$batchId-")
-    promote(fs, new Path(s"$staging/metrics"), new Path(s"$indexDir/metrics"), s"b$batchId-")
+    tables.foreach { t =>
+      IndexBuilder.promote(fs, new Path(s"$staging/$t"), new Path(s"$indexDir/$t"), prefix)
+    }
 
     // ---- incremental stats merge: old terms + delta (O(vocab), not
     // O(index) — the r1 version re-aggregated ALL postings per batch) -----
@@ -193,36 +141,17 @@ object StreamingIndexer {
     val prior =
       if (hasIndex) spark.read.parquet(corpusBase.toString).as[CorpusStats].head()
       else CorpusStats(0L, 0L, 0)
-    Seq(CorpusStats(prior.doc_count + batchDocs, prior.sum_dl + batchDl, baseSeg + 1))
+    Seq(CorpusStats(prior.doc_count + metrics.n_docs, prior.sum_dl + metrics.sum_dl, baseSeg + 1))
       .toDS().write.mode("overwrite").parquet(s"$indexDir/corpus")
 
     // ---- commit ----------------------------------------------------------
-    Seq(LineageRow(step, baseSeg, baseSeg + 1, prior.doc_count + batchDocs, 0L,
-      (System.nanoTime() - t0) / 1000000,
-      new java.sql.Timestamp(System.currentTimeMillis())))
+    Seq(LineageRow(step, baseSeg, baseSeg + 1, prior.doc_count + metrics.n_docs, 0L,
+      (System.nanoTime() - t0) / 1000000, new Timestamp(System.currentTimeMillis())))
       .toDS().write.mode("append").parquet(s"$indexDir/lineage")
     fs.delete(termsBase, true)
     fs.delete(corpusBase, true)
     fs.delete(staging, true)
   }
-
-  /** Move a staged parquet dir's data files into `dst` under
-    * `<prefix><original-name>` — deterministic names so an interrupted
-    * promote is fully reversible by prefix. */
-  private def promote(fs: FileSystem, src: Path, dst: Path, prefix: String): Unit = {
-    fs.mkdirs(dst)
-    fs.listStatus(src).foreach { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(".parquet"))
-        fs.rename(st.getPath, new Path(dst, prefix + n))
-    }
-  }
-
-  private def deletePrefixed(fs: FileSystem, dir: Path, prefix: String): Unit =
-    if (fs.exists(dir))
-      fs.listStatus(dir).foreach { st =>
-        if (st.getPath.getName.startsWith(prefix)) fs.delete(st.getPath, false)
-      }
 
   /** Continuous indexing query: transcript stream -> index appends with
     * checkpointed exactly-once batches (TopicStream/DaemonStream analogue,

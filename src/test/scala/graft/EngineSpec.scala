@@ -258,25 +258,58 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("resume: interrupted build completes to an identical index") {
-    val dirA = TestSpark.tmpDir("idx-resume")
-    val cfgB = IndexBuilder.Config(numSegments = 6, batches = 3)
-    // simulate a crash: run only docs + first batch, by building with a
-    // config whose later steps we delete from lineage
-    IndexBuilder.build(spark, corpus, dirA, cfgB)
-    // wipe lineage rows for batch-1.. and stats, delete their outputs is not
-    // needed (idempotent append would duplicate) — instead simulate by
-    // rebuilding fresh and checking lineage-driven skip:
-    val before = IndexBuilder.completedSteps(spark, dirA)
-    assert(before.contains("docs") && before.contains("stats"))
-    val r2 = IndexBuilder.build(spark, corpus, dirA, cfgB) // full re-run: all steps skipped
-    assert(r2.resumedSteps == 5) // docs + 3 batches + stats
-    // and the resumed index answers identically to the reference index
-    val sA = new Searcher(spark, dirA)
-    for (q <- Seq("the", "spark shuffle", "error -timeout")) {
-      val a = sA.topKHits(q, 10).collect().map(h => (h.doc_id, h.score)).toSeq
-      val b = searcher.topKHits(q, 10).collect().map(h => (h.doc_id, h.score)).toSeq
-      assert(a == b)
+    // per table: row count and bit_xor(xxhash64(row)); metrics without its
+    // wall-clock finished_ts
+    def fingerprint(dir: String): Seq[(String, Long, Long)] =
+      Seq("postings", "docs", "terms", "corpus", "metrics").map { t =>
+        val df = spark.read.parquet(s"$dir/$t").drop("finished_ts")
+        val (n, x) = df.agg(count(lit(1)),
+          coalesce(bit_xor(xxhash64(df.columns.map(col).toSeq: _*)), lit(0L)))
+          .as[(Long, Long)].head()
+        (t, n, x)
+      }
+    val queries = Seq("the", "spark shuffle", "error -timeout")
+    def pages(s: Searcher) = queries.map(q => s.topKHits(q, 10).collect().map(h => (h.doc_id, h.score)).toSeq)
+    def pagesOf(dir: String) = {
+      val s = new Searcher(spark, dir)
+      try pages(s) finally s.close()
     }
+    // a build killed after promoting later batches' postings (and even after
+    // writing the stats tables) but before their lineage rows: keep only the
+    // `keep` rows, leave every file in place
+    def cutLineage(dir: String, keep: Set[String]): Unit = {
+      val rows = spark.read.parquet(s"$dir/lineage").as[graft.index.LineageRow]
+        .collect().filter(r => keep(r.step)).toSeq
+      rows.toDS().write.mode("overwrite").parquet(s"$dir/lineage")
+    }
+
+    // case 1: three batches, cut after batch-0
+    val dir3 = TestSpark.tmpDir("idx-resume")
+    val cfg3 = IndexBuilder.Config(numSegments = 6, batches = 3)
+    IndexBuilder.build(spark, corpus, dir3, cfg3)
+    val (fp3, pages3) = (fingerprint(dir3), pagesOf(dir3))
+    cutLineage(dir3, Set("docs", "batch-0"))
+    // a changed batch plan fails loudly: batches = 1 plans batch-0 as
+    // [0, 6), but the committed batch-0 covers [0, 2) only
+    val e = intercept[IllegalStateException](
+      IndexBuilder.build(spark, corpus, dir3, cfg3.copy(batches = 1)))
+    assert(Seq("batch-0", "[0, 2)", "[0, 6)").forall(e.getMessage.contains), e.getMessage)
+    val r3 = IndexBuilder.build(spark, corpus, dir3, cfg3)
+    assert(r3.resumedSteps == 2) // docs + batch-0
+    assert(fingerprint(dir3) == fp3)
+    assert(pagesOf(dir3) == pages3)
+
+    // case 2: the default single batch (a copy of the shared index), cut
+    // after docs
+    val dir1 = TestSpark.tmpDir("idx-resume-1") + "/idx"
+    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(indexDir), fs,
+      new org.apache.hadoop.fs.Path(dir1), false, spark.sparkContext.hadoopConfiguration)
+    cutLineage(dir1, Set("docs"))
+    val r1 = IndexBuilder.build(spark, corpus, dir1, IndexBuilder.Config(numSegments = 7))
+    assert(r1.resumedSteps == 1) // docs
+    assert(fingerprint(dir1) == fingerprint(indexDir))
+    assert(pagesOf(dir1) == pages(searcher))
   }
 
   test("sorted-input fast path: zero-shuffle build == shuffle build; unsorted input falls back") {
