@@ -41,12 +41,13 @@ import graft.codec.SmallFloat
   * postings batch commits by the streaming appender's rule (Lucene's commit
   * point: files no lineage row references are garbage): it writes to
   * `staging/batch-<b>/`, [[promote]]s the files into postings/ under the
-  * `batch-<b>-` prefix, then appends its row. A resume first clears the
-  * prefix of every batch it re-runs, so a build killed between promote and
-  * row resumes to an identical index instead of doubling that batch's
-  * postings. A completed batch whose recorded segment range is not the one
-  * this run plans for it fails the build (IllegalStateException) rather
-  * than leave segments without postings.
+  * `batch-<b>-` prefix, then appends its row; `staging/` is cleared after
+  * the last batch. A resume first clears the prefix of every batch it
+  * re-runs, so a build killed between promote and row resumes to an
+  * identical index instead of doubling that batch's postings. A completed
+  * batch whose recorded segment range is not the one this run plans for it
+  * fails the build (IllegalStateException) rather than leave segments
+  * without postings.
   */
 object IndexBuilder {
 
@@ -351,14 +352,15 @@ object IndexBuilder {
         val prefix = s"batch-$b-"
         val staged = new Path(s"$dir/staging/batch-$b")
         deletePrefixed(fs, postingsDir, prefix)
-        writeSegments(spark, s"$dir/docs", staged.toString, analyzer,
-          if (cfg.batches > 1) Some((lo, hi)) else None)
+        writeSegments(spark, s"$dir/docs", staged.toString, analyzer, lo, hi)
         promote(fs, staged, postingsDir, prefix)
         appendLineage(spark, dir, LineageRow(s"batch-$b", lo, hi, 0L, 0L,
           (System.nanoTime() - t0) / 1000000, now()))
-        fs.delete(staged, true)
       }
     }
+    // promote leaves each batch's non-data files behind, and a build killed
+    // after a batch's row leaves its whole staged dir: clear them all here
+    fs.delete(new Path(s"$dir/staging"), true)
 
     // ---- step 3: exact global stats --------------------------------------
     if (done("stats")) skipped += 1
@@ -510,8 +512,9 @@ object IndexBuilder {
 
   /** The one segment writer, shared by the build and the streaming appender:
     * one analysis + in-segment posting-build pass over the DocRow parquet in
-    * `docsDir` (only segments [lo, hi) when `range` is given), written to
-    * `outDir` as PostingRows sorted by (term, segment). A per-partition
+    * `docsDir`, segments [lo, hi) only (a build batch's slice; an append
+    * passes its one new segment), written to `outDir` as PostingRows sorted
+    * by (term, segment). A per-partition
     * term -> PostingsBuf map (plus the "" norms-sidecar entry per segment) is
     * flushed through [[PostingsAggregator.finish]] with no exchange — every
     * (segment, term) key is complete inside its partition.
@@ -530,7 +533,7 @@ object IndexBuilder {
     * the cached upstream lineage (with per-relation serialized Hadoop
     * Configurations) through (de)serialization. */
   private[graft] def writeSegments(spark: SparkSession, docsDir: String, outDir: String,
-      analyzer: Analyzer, range: Option[(Int, Int)] = None): Unit = {
+      analyzer: Analyzer, lo: Int, hi: Int): Unit = {
     import spark.implicits._
     val docsPath = new Path(docsDir)
     val maxDocsFile = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -545,9 +548,8 @@ object IndexBuilder {
     // at 16 slots, ~28% idle tail on the dominant stage)
     spark.conf.set("spark.sql.files.openCostInBytes", (maxDocsFile + 1).toString)
     try {
-      val docs = spark.read.parquet(docsDir)
-      val in = range.fold(docs) { case (lo, hi) => docs.where($"segment_id" >= lo && $"segment_id" < hi) }
-      val rows: Dataset[PostingRow] = in
+      val rows: Dataset[PostingRow] = spark.read.parquet(docsDir)
+        .where($"segment_id" >= lo && $"segment_id" < hi)
         .select($"doc_id", $"segment_id", $"text", $"role", $"tool")
         .as[(Long, Int, String, String, String)]
         .mapPartitions { it =>

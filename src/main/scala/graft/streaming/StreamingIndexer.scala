@@ -103,7 +103,8 @@ object StreamingIndexer {
       .write.mode("overwrite").option("compression", IndexBuilder.Zstd).parquet(s"$staging/docs")
 
     // ---- stage postings with the build's segment writer (batch-sized read)
-    IndexBuilder.writeSegments(spark, s"$staging/docs", s"$staging/postings", analyzer)
+    IndexBuilder.writeSegments(spark, s"$staging/docs", s"$staging/postings", analyzer,
+      baseSeg, baseSeg + 1)
 
     // ---- batch delta stats (O(batch); materialized BEFORE promote moves
     // the staged files away) -----------------------------------------------

@@ -283,11 +283,15 @@ class EngineSpec extends AnyFunSuite {
       rows.toDS().write.mode("overwrite").parquet(s"$dir/lineage")
     }
 
+    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
     // case 1: three batches, cut after batch-0
     val dir3 = TestSpark.tmpDir("idx-resume")
     val cfg3 = IndexBuilder.Config(numSegments = 6, batches = 3)
     IndexBuilder.build(spark, corpus, dir3, cfg3)
     val (fp3, pages3) = (fingerprint(dir3), pagesOf(dir3))
+    // batched slicing answers as the shared single-batch index does
+    assert(pages3 == pages(searcher))
     cutLineage(dir3, Set("docs", "batch-0"))
     // a changed batch plan fails loudly: batches = 1 plans batch-0 as
     // [0, 6), but the committed batch-0 covers [0, 2) only
@@ -296,13 +300,17 @@ class EngineSpec extends AnyFunSuite {
     assert(Seq("batch-0", "[0, 2)", "[0, 6)").forall(e.getMessage.contains), e.getMessage)
     val r3 = IndexBuilder.build(spark, corpus, dir3, cfg3)
     assert(r3.resumedSteps == 2) // docs + batch-0
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir3/staging")))
     assert(fingerprint(dir3) == fp3)
     assert(pagesOf(dir3) == pages3)
+    // re-running a complete build skips every step and changes nothing
+    val again = IndexBuilder.build(spark, corpus, dir3, cfg3)
+    assert(again.resumedSteps == 5) // docs + 3 batches + stats
+    assert(fingerprint(dir3) == fp3)
 
     // case 2: the default single batch (a copy of the shared index), cut
     // after docs
     val dir1 = TestSpark.tmpDir("idx-resume-1") + "/idx"
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(indexDir), fs,
       new org.apache.hadoop.fs.Path(dir1), false, spark.sparkContext.hadoopConfiguration)
     cutLineage(dir1, Set("docs"))
