@@ -26,7 +26,8 @@ import graft.codec.SmallFloat
   *   docs/      DocRow parquet, sorted by doc_id (stored fields)
   *   postings/  PostingRow parquet; rows with term=="" are the per-segment
   *              norms sidecar (norms blob in `norms`, dl sum in `ttf`)
-  *   terms/     TermStats parquet (exact global df/ttf)
+  *   terms/     TermStats parquet (exact global df/ttf); read by ops and
+  *              perfbench, not by the Searcher, which sums postings' doc_count
   *   corpus/    single CorpusStats row
   *   metrics/   MetricsRow parquet — per-segment build metrics (docs, dl
   *              sum, vocabulary, posting entries; north-rule metrics table)
@@ -142,8 +143,6 @@ object IndexBuilder {
       val t0 = System.nanoTime()
       var tm = t0
       val src = turns.select($"conv_id", $"turn_idx", $"role", $"text", $"tool", $"ts")
-      val prevScanSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-      val prevScanOpen = spark.conf.get("spark.sql.files.openCostInBytes")
       val srcBytes = turns.inputFiles.headOption.map { _ =>
         turns.inputFiles.map { f =>
           val p = new Path(f)
@@ -177,16 +176,16 @@ object IndexBuilder {
           val target = srcBytes /
             math.max(cfg.numSegments.toLong, 2L * spark.sparkContext.defaultParallelism)
           val split = math.min(128L << 20, math.max(16L << 20, target))
-          spark.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
           // openCost = split: never pack two files into one split (packing
           // order is size-desc, which would break within-split sortedness)
-          spark.conf.set("spark.sql.files.openCostInBytes", split.toString)
-          try buildDocsSorted(spark, src, dir)
-          catch {
-            case e: Exception if messageChain(e).exists(_.contains(FastPathMismatch)) =>
-              // nondeterministic source plan between the two passes: fall
-              // back to the shuffle path (which re-overwrites docs/)
-              None
+          withFilesConf(spark, "maxPartitionBytes" -> split, "openCostInBytes" -> split) {
+            try buildDocsSorted(spark, src, dir)
+            catch {
+              case e: Exception if messageChain(e).exists(_.contains(FastPathMismatch)) =>
+                // nondeterministic source plan between the two passes: fall
+                // back to the shuffle path (which re-overwrites docs/)
+                None
+            }
           }
         }
       fastSegs.foreach { case (segs, nDocs) =>
@@ -206,13 +205,9 @@ object IndexBuilder {
       // time; with no spill the stage is linear). Target ~8 map tasks
       // per shuffle slot, clamped to [16MB, 128MB] so huge corpora don't
       // explode into millions of tasks and tiny ones keep one split.
-      spark.conf.set("spark.sql.files.openCostInBytes", prevScanOpen)
-      if (srcBytes > 0) {
-        val target = srcBytes / (8L * spark.sparkContext.defaultParallelism)
-        val split = math.min(128L << 20, math.max(16L << 20, target))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
-      }
-      try {
+      val split = math.min(128L << 20,
+        math.max(16L << 20, srcBytes / (8L * spark.sparkContext.defaultParallelism)))
+      withFilesConf(spark, Seq("maxPartitionBytes" -> split).filter(_ => srcBytes > 0): _*) {
       val sketchK = cfg.numSegments * 200
       val sketches: Array[PartitionSketch] =
         src.select($"conv_id", $"turn_idx").as[(String, Int)]
@@ -307,13 +302,7 @@ object IndexBuilder {
       tm = mark(tm, "passB-docs")
       appendLineage(spark, dir, LineageRow("docs", 0, cfg.numSegments, acc, 0L,
         (System.nanoTime() - t0) / 1000000, now()))
-      } finally {
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prevScanSplit)
-        spark.conf.set("spark.sql.files.openCostInBytes", prevScanOpen)
       }
-      } else {
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prevScanSplit)
-        spark.conf.set("spark.sql.files.openCostInBytes", prevScanOpen)
       }
     }
 
@@ -535,19 +524,11 @@ object IndexBuilder {
   private[graft] def writeSegments(spark: SparkSession, docsDir: String, outDir: String,
       analyzer: Analyzer, lo: Int, hi: Int): Unit = {
     import spark.implicits._
-    val docsPath = new Path(docsDir)
-    val maxDocsFile = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(docsPath)
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen)
-      .foldLeft(1L)(math.max)
-    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (maxDocsFile + 1).toString)
+    val bound = largestParquetFile(spark, docsDir) + 1
     // openCost = split cap: otherwise Spark PACKS 2+ small docs files into
     // one task (measured: 128 segment files -> 64 tasks -> 4 uneven waves
     // at 16 slots, ~28% idle tail on the dominant stage)
-    spark.conf.set("spark.sql.files.openCostInBytes", (maxDocsFile + 1).toString)
-    try {
+    withFilesConf(spark, "maxPartitionBytes" -> bound, "openCostInBytes" -> bound) {
       val rows: Dataset[PostingRow] = spark.read.parquet(docsDir)
         .where($"segment_id" >= lo && $"segment_id" < hi)
         .select($"doc_id", $"segment_id", $"text", $"role", $"tool")
@@ -654,9 +635,27 @@ object IndexBuilder {
           }
         }
       rows.write.mode("overwrite").option("compression", Zstd).parquet(outDir)
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+    }
+  }
+
+  /** Byte length of the largest parquet file directly under `dir` (0 if
+    * none), listed through the FileSystem of `dir`'s URI. */
+  private[graft] def largestParquetFile(spark: SparkSession, dir: String): Long = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).foldLeft(0L)(math.max)
+  }
+
+  /** Runs `body` with the given `spark.sql.files.<name>` byte confs set,
+    * then restores each to the value it had. */
+  private[graft] def withFilesConf[T](spark: SparkSession, confs: (String, Long)*)(body: => T): T = {
+    val keys = confs.map { case (k, v) => (s"spark.sql.files.$k", v) }
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -295,7 +295,7 @@ object FtsOps {
   }
 
   // one Searcher per index dir per session epoch — repeated op invocations
-  // reuse its persisted postings/terms and result caches instead of
+  // reuse its persisted postings, term dictionary and result caches instead of
   // leaking a fresh set of persisted DataFrames each call
   private val searchers = scala.collection.mutable.Map.empty[String, Searcher]
 
@@ -656,7 +656,7 @@ object FtsOps {
       "general wildcard `d?ta qu*ry` — `?` single char, `*` any run, infix " +
         "included (SolrQueryParserBase getWildcardQuery -> Lucene " +
         "WildcardQuery): parsed by the lucene grammar, expanded against the " +
-        "terms table with a literal-prefix range read + anchored regex " +
+        "searcher's term dictionary with a literal-prefix range + anchored regex " +
         "(compiled-automaton commonPrefix role), each concrete term " +
         "BM25-scored in double precision (SCORING_BOOLEAN_REWRITE). The " +
         "oracle derives the identical expansion with LIKE 'd_ta' / " +

@@ -163,7 +163,7 @@ object SearchOps {
           // prefix, NOT on ":": the analyzer legally emits colon-joined
           // text tokens (UAX#29 MidLetter), which ARE vocabulary
           .where(!col("term").startsWith(graft.index.IndexBuilder.FieldTermPrefix))
-        val dfs = sr.termStats(input) // memoized point reads; absent -> no entry
+        val dfs = sr.termStats(input) // dictionary lookups; absent -> no entry
         // per missing term: a distributed candidate filter + top-1
         // TakeOrdered over the (vocabulary-sized) terms table — bounded by
         // QUERY length, not data

@@ -66,7 +66,7 @@ final case class ConjGroup(terms: Vector[String], occur: Int,
   * (`body*`), kind 1 = fuzzy (`body~maxEdits`), kind 2 = general wildcard
   * (`body` is a glob with `*` = any run, `?` = any one char — leading /
   * infix stars and `?` included, SolrQueryParserBase getWildcardQuery).
-  * Expanded by Searcher.expand against the terms table with Lucene's
+  * Expanded by Searcher.expand against the term dictionary with Lucene's
   * SCORING_BOOLEAN_REWRITE semantics (each concrete term scores normally). */
 final case class MultiTerm(kind: Int, body: String, maxEdits: Int, occur: Int, boost: Float)
 

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSess
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, LongType, StructField, StructType}
 import graft.analysis.Analyzer
-import graft.index.{CorpusStats, PostingRow}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.index.{CorpusStats, DocRow, IndexBuilder, PostingRow}
 import graft.index.IndexBuilder.FieldTermPrefix
 
 /** Distributed top-k query engine over a built index (SURVEY.md §3.1 "Spark
   * shape"): driver parses the query and looks up exact global term stats
-  * (the ExactStatsCache analogue), executors run block-max WAND per segment
+  * in the searcher's term dictionary (the ExactStatsCache analogue),
+  * executors run block-max WAND per segment
   * (segment = partition = the shard-local search of
   * `solr/core/src/java/org/apache/spark/../SolrIndexSearcher.java` — see SURVEY §3.1),
   * and the per-segment top-k heaps are merged exactly like Solr's
@@ -20,6 +22,10 @@ import graft.index.IndexBuilder.FieldTermPrefix
   * [[search]] then fetches stored fields for just those ≤k winners with
   * one pruned `doc_id IN (...)` read and ranks the page on the driver
   * (Solr's PURPOSE_GET_FIELDS round-trip).
+  *
+  * Opening a searcher makes ONE pass over the postings: it materializes the
+  * cache and sums the segments' term dictionaries into the searcher's, as
+  * Lucene does; term stats, expansion and fq range keys are driver lookups.
   *
   * Execution shape: every query path (top-k, top-k with count, match set,
   * dismax, phrase enumeration) hands a per-segment body to ONE stage
@@ -49,136 +55,61 @@ final class Searcher(
 
   import spark.implicits._
 
-  val corpus: CorpusStats =
-    spark.read.parquet(s"$indexDir/corpus").as[CorpusStats].head()
+  /** An index table read with its row type's schema: no inference job. */
+  private def table[T: Encoder](name: String): DataFrame =
+    spark.read.schema(implicitly[Encoder[T]].schema).parquet(s"$indexDir/$name")
+
+  val corpus: CorpusStats = table[CorpusStats]("corpus").as[CorpusStats].head()
   val avgdl: Float = bm25.avgdl(corpus.sum_dl, corpus.doc_count)
 
-  // With cache=true the postings and terms tables persist across queries —
-  // the searcher-epoch caching role of the reference's queryResult
-  // cache (`solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:164-165`).
-  // Materialization runs under a scan conf that forbids mid-file splits
-  // (openCost = maxPartitionBytes = largest file) so each segment-aligned
-  // postings file lands whole in one cache partition. At 10^12-doc scale
-  // set cache=false: term-predicate pushdown on the term-sorted parquet
-  // keeps each query an index-like point read instead.
-  private val postingsDF: DataFrame = {
-    if (!cache) spark.read.parquet(s"$indexDir/postings")
-    else {
-      val files = Option(new java.io.File(s"$indexDir/postings")
-        .listFiles((_, n) => n.endsWith(".parquet"))).getOrElse(Array.empty)
-      val maxFile = if (files.isEmpty) 0L else files.map(_.length).max
-      val conf = spark.conf
-      val saved = Seq("spark.sql.files.maxPartitionBytes",
-        "spark.sql.files.openCostInBytes").map(k => k -> conf.getOption(k))
-      try {
-        val bound = math.max(maxFile + 1, 128L * 1024 * 1024).toString
-        conf.set("spark.sql.files.maxPartitionBytes", bound)
-        conf.set("spark.sql.files.openCostInBytes", math.max(maxFile + 1, 4L * 1024 * 1024).toString)
-        val df = spark.read.parquet(s"$indexDir/postings").persist()
-        df.foreach(_ => ()) // materialize NOW, under this scan conf
-        df
-      } finally saved.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
-      }
+  // With cache=true the postings persist for the searcher epoch (the
+  // queryResult cache role, `solr/.../SolrIndexSearcher.java:164-165`),
+  // materialized by the dictionary pass under a scan conf that keeps each
+  // segment-aligned postings file whole in one partition (openCost =
+  // maxPartitionBytes > largest file). At 10^12-doc scale set cache=false:
+  // term pushdown on the term-sorted parquet keeps each query a point read.
+  private val (postingsDF, dict, colocated): (DataFrame, Searcher.TermDictionary, Boolean) = {
+    val maxFile = IndexBuilder.largestParquetFile(spark, s"$indexDir/postings")
+    IndexBuilder.withFilesConf(spark, "maxPartitionBytes" -> math.max(maxFile + 1, 128L << 20),
+        "openCostInBytes" -> math.max(maxFile + 1, 4L << 20)) {
+      val read = table[PostingRow]("postings")
+      val df = if (cache) read.persist() else read
+      val (d, disjoint) = Searcher.scanDictionary(df)
+      (df, d, cache && disjoint)
     }
   }
 
-  /** Exposed for tests/plan audits: true = one-stage no-shuffle path. */
+  /** Exposed for tests/plan audits: true = one-stage no-shuffle path, iff no
+    * segment spans two partitions of the MATERIALIZED cache (never torn). */
   def usesColocatedPath: Boolean = colocated
 
-  /** True iff every segment's rows live inside a single cached partition —
-    * checked against the MATERIALIZED cache layout, not inferred from file
-    * sizes, so the one-stage path can never silently score a torn segment. */
-  private val colocated: Boolean = cache && {
-    try postingsDF
-      .select(spark_partition_id().as("pid"), $"segment_id").distinct()
-      .groupBy($"segment_id").agg(countDistinct($"pid").as("np"))
-      .agg(coalesce(max($"np"), lit(0L))).as[Long].head() <= 1L
-    catch { case _: Throwable => false }
-  }
-
-  private val termsDF: DataFrame = {
-    val df = spark.read.parquet(s"$indexDir/terms")
-    if (cache) df.persist() else df
-  }
-
-  /** The stored-fields table: one relation per Searcher epoch (file
-    * listing and schema resolved once, like `postingsDF`/`termsDF`), on
-    * first use, so a searcher that never fetches never pays for it. */
-  lazy val docs: DataFrame = spark.read.parquet(s"$indexDir/docs")
+  /** The stored-fields table: one relation per Searcher epoch, on first
+    * use, so a searcher that never fetches never lists its files. */
+  lazy val docs: DataFrame = table[DocRow]("docs")
 
   /** Drop this searcher's cached tables (end of searcher epoch). */
   def close(): Unit = if (cache) {
     postingsDF.unpersist()
-    termsDF.unpersist()
     queryResultCache.clear()
   }
 
-  // per-seen-term df memo (bounded by distinct queried terms — the cached
-  // term statistics of the reference's stats cache, SolrCore.java:1645-1658)
-  private val dfMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** df lookup for the query's terms (tiny collect — filter pushdown on the
-    * sorted terms table keeps this an index-like point read at scale). */
-  def termStats(terms: Seq[String]): Map[String, Long] = {
-    if (terms.isEmpty) return Map.empty
-    val missing = if (cache) terms.filterNot(dfMemo.containsKey) else terms
-    val fetched: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else termsDF
-        .where($"term".isin(missing: _*))
-        .select($"term", $"df").as[(String, Long)]
-        .collect().toMap
-    if (cache) {
-      // a term absent from the index memoizes as df=0
-      missing.foreach(t => dfMemo.put(t, java.lang.Long.valueOf(fetched.getOrElse(t, 0L))))
-      terms.map(t => t -> dfMemo.get(t).longValue).toMap.filter(_._2 > 0)
-    } else fetched
-  }
+  /** Global df of each of `terms` in the index, a dictionary lookup (no
+    * Spark job); an absent term gets no entry. */
+  def termStats(terms: Seq[String]): Map[String, Long] =
+    terms.iterator.flatMap(t => dict.df(t).map(t -> _)).toMap
 
   /** Top-k (doc_id, score) for a raw query string. */
   def topKHits(q: String, k: Int): Dataset[Hit] = topKHits(QueryParser.parse(q, analyzer), k)
 
-  /** Resolve multi-term clauses (prefix wildcard, fuzzy) against the terms
-    * table — Lucene's MultiTermQuery rewrite, using the documented
-    * SCORING_BOOLEAN_REWRITE (each concrete term scores normally), capped
-    * at MaxExpansions like the reference's BooleanQuery limit. Prefix
-    * expansion is an index-range read (term-sorted parquet + pushdown);
-    * fuzzy runs a distributed edit-distance filter over the vocabulary. */
+  /** Resolve multi-term clauses (prefix wildcard, fuzzy) against the term
+    * dictionary on the driver — Lucene's MultiTermQuery rewrite with the
+    * documented SCORING_BOOLEAN_REWRITE (each concrete term scores normally),
+    * capped at MaxExpansions (the reference's BooleanQuery limit). */
   def expand(parsed: ParsedQuery): ParsedQuery = {
     if (parsed.multiTerms.isEmpty) return parsed
-    // field postings (role:x / tool:y, layout v4) are NOT text
-    // vocabulary: a fuzzy body like `roles~2` must not expand into a field
-    // term. The v4 namespace makes the test exact — colon-joined TEXT
-    // tokens (`err:code`, UAX#29 MidLetter) stay expandable.
-    val vocab = termsDF.where(
-      !$"term".startsWith(graft.index.IndexBuilder.FieldTermPrefix))
     var p = parsed
     p.multiTerms.foreach { mt =>
-      val expanded: Vector[String] = (mt.kind match {
-        case 0 =>
-          vocab.where($"term".startsWith(mt.body))
-            .orderBy($"term").limit(Searcher.MaxExpansions)
-            .select($"term").as[String].collect()
-        case 2 =>
-          // general wildcard (Lucene WildcardQuery rewrite): a literal
-          // prefix up to the first wildcard char narrows the vocabulary
-          // scan to a range read (Lucene's compiled-automaton commonPrefix
-          // role); a leading wildcard degrades to a full vocabulary scan —
-          // distributed, but documented as the expensive shape, exactly
-          // like the reference without ReversedWildcardFilter
-          val prefix = mt.body.takeWhile(c => c != '*' && c != '?')
-          val base = if (prefix.isEmpty) vocab else vocab.where($"term".startsWith(prefix))
-          base.where($"term".rlike(Searcher.globRegex(mt.body)))
-            .orderBy($"term").limit(Searcher.MaxExpansions)
-            .select($"term").as[String].collect()
-        case _ =>
-          val (body, maxE) = (mt.body, mt.maxEdits)
-          vocab.select($"term").as[String]
-            .filter(t => Searcher.editDistanceAtMost(t, body, maxE))
-            .collect().sorted.take(Searcher.MaxExpansions)
-      }).toVector
+      val expanded = expansions(mt)
       // an expanded term colliding with an already-scored clause accumulates
       // its boost (duplicate clauses sum — QueryParser header doc); a term
       // scored but absent from the map carries implicit weight 1
@@ -196,6 +127,24 @@ final class Searcher(
       }
     }
     p.copy(multiTerms = Vector.empty)
+  }
+
+  /** One multi-term clause's terms from the text vocabulary (a fuzzy
+    * `roles~2` must not expand into a field term). A prefix is its
+    * dictionary range; a general wildcard is its literal prefix's range
+    * (Lucene's commonPrefix; a leading wildcard scans the vocabulary)
+    * filtered by the glob's regex, Spark's `rlike` test. Both keep the
+    * first MaxExpansions in dictionary order; fuzzy, a vocabulary scan by
+    * edit distance, keeps the first MaxExpansions in String order. */
+  private def expansions(mt: MultiTerm): Vector[String] = mt.kind match {
+    case 0 => dict.textTerms(mt.body).take(Searcher.MaxExpansions).toVector
+    case 2 =>
+      val m = java.util.regex.Pattern.compile(Searcher.globRegex(mt.body)).matcher("")
+      dict.textTerms(mt.body.takeWhile(c => c != '*' && c != '?'))
+        .filter(t => m.reset(t).find()).take(Searcher.MaxExpansions).toVector
+    case _ =>
+      dict.textTerms("").filter(t => Searcher.editDistanceAtMost(t, mt.body, mt.maxEdits))
+        .toVector.sorted.take(Searcher.MaxExpansions)
   }
 
   /** Everything a query execution needs: the broadcast metadata and the
@@ -325,17 +274,13 @@ final class Searcher(
     Some((bcMeta, rows))
   }
 
-  /** The `\u0002field:` posting keys of the values in range `r`, read from
-    * the terms table with Spark's own string order (a shared key prefix
+  /** The `\u0002field:` posting keys of the values in range `r`: a range
+    * of the term dictionary in Spark's string order (a shared key prefix
     * keeps the value order). Exact: no MaxExpansions cap, since a truncated
-    * filter drops matching docs. The keys' dfs join the term-stats memo. */
-  private def rangeKeys(r: RangeFilter): Vector[String] = {
+    * filter drops matching docs. Package-visible for the reference test. */
+  private[graft] def rangeKeys(r: RangeFilter): Vector[String] = {
     val p = s"$FieldTermPrefix${r.field}:"
-    val got = termsDF
-      .where($"term".startsWith(p) && Searcher.inRange($"term", p + r.lo, p + r.hi, r.inclusive))
-      .select($"term", $"df").as[(String, Long)].collect()
-    if (cache) got.foreach { case (t, df) => dfMemo.put(t, java.lang.Long.valueOf(df)) }
-    got.map(_._1).toVector
+    dict.range(p + r.lo, p + r.hi, r.inclusive)
   }
 
   /** The one per-segment stage every query path runs: `body` gets one
@@ -750,6 +695,60 @@ object Searcher {
       case Some((should, must, not, _, filters)) =>
         Wand.enumerateMatches(should, must, not, filters)
     }
+
+  /** The index's term dictionary: every term but the "" norms rows, sorted
+    * in Spark's string order (UTF-8 bytes, `UTF8String.compareTo`), beside
+    * its global df. Immutable, so concurrent queries share it. */
+  final class TermDictionary(terms: Array[String], dfs: Array[Long]) extends Serializable {
+    /** Index of the first term >= `key` in Spark's string order. */
+    private def lowerBound(key: String): Int = {
+      val k = UTF8String.fromString(key)
+      var (lo, hi) = (0, terms.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (UTF8String.fromString(terms(mid)).compareTo(k) < 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    def df(t: String): Option[Long] =
+      Some(lowerBound(t)).filter(i => i < terms.length && terms(i) == t).map(dfs)
+
+    /** The terms starting with `prefix`, in order, minus the `\u0002` field
+      * keys (one contiguous block): the text vocabulary's. */
+    def textTerms(prefix: String): Iterator[String] =
+      Iterator.range(lowerBound(prefix), terms.length).map(terms)
+        .takeWhile(_.startsWith(prefix)).filterNot(_.startsWith(FieldTermPrefix))
+
+    /** The terms in [lo, hi] (inclusive) or (lo, hi), in order. */
+    def range(lo: String, hi: String, inclusive: Boolean): Vector[String] = {
+      val end = lowerBound(hi) + (if (inclusive && df(hi).isDefined) 1 else 0)
+      (lowerBound(lo) until end).map(terms).filter(inclusive || _ != lo).toVector
+    }
+  }
+
+  /** The open pass, one job over `postings`: each partition returns its
+    * (term, Σ doc_count) pairs (none if it has no rows) and segment ids.
+    * The driver sums the pairs into the [[TermDictionary]]; the flag is
+    * true iff no segment id shows up in two partitions. */
+  private def scanDictionary(postings: DataFrame): (TermDictionary, Boolean) = {
+    import postings.sparkSession.implicits._
+    val parts = postings.select($"term", $"segment_id", $"doc_count").as[(String, Int, Int)]
+      .mapPartitions { it =>
+        val dfs = scala.collection.mutable.HashMap.empty[String, Long]
+        val segs = scala.collection.mutable.HashSet.empty[Int]
+        it.foreach { case (t, seg, n) =>
+          segs += seg
+          if (t.nonEmpty) dfs(t) = dfs.getOrElse(t, 0L) + n
+        }
+        val (ts, ds) = dfs.toArray.unzip
+        Iterator.single((ts, ds, segs.toArray))
+      }.collect()
+    val sorted = parts.flatMap { case (ts, ds, _) => ts.zip(ds) }.groupMapReduce(_._1)(_._2)(_ + _)
+      .toArray.map(e => (UTF8String.fromString(e._1), e)).sortBy(_._1).map(_._2)
+    val segs = parts.flatMap(_._3)
+    (new TermDictionary(sorted.map(_._1), sorted.map(_._2)), segs.length == segs.distinct.length)
+  }
 
   /** `c` in [lo, hi] (inclusive) or (lo, hi), in Spark's string order. */
   private[query] def inRange(c: Column, lo: String, hi: String, inclusive: Boolean): Column =

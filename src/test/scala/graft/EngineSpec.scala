@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.index.{IndexBuilder, TranscriptGen}
-import graft.query.{Bm25, Oracle, QueryParser, Searcher}
+import graft.query.{Bm25, MultiTerm, Oracle, ParsedQuery, QueryParser, RangeFilter, Searcher}
 
 /** End-to-end rank-identity suite: engine (block-max WAND over the built
   * index) vs the brute-force DataFrame oracle, on a deterministic seeded
@@ -88,7 +88,7 @@ class EngineSpec extends AnyFunSuite {
   )
 
   private def assertRankIdentical(q: String, k: Int): Unit = {
-    // multi-term clauses (wildcard/fuzzy) expand against the terms table;
+    // multi-term clauses (wildcard/fuzzy) expand against the term dictionary;
     // the oracle consumes the same expansion (the expansion itself is
     // pinned by the dedicated wildcard/fuzzy test)
     val parsed = searcher.expand(QueryParser.parse(q))
@@ -227,34 +227,68 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("search() job count: topKHits' jobs + 1 with hits, ZERO for a zero-hit or all-stopword query") {
-    val q = "error retry data"
-    searcher.search(q, 10).collect() // warm the term-stats memo
-    val (hits, topJobs) = jobsOf(searcher.topKHits(q, 10).collect())
-    val (page, searchJobs) = jobsOf(searcher.search(q, 10).collect())
-    assert(hits.nonEmpty && page.length == hits.length)
-    assert(searchJobs == topJobs + 1, s"search ran $searchJobs jobs, topKHits $topJobs")
-    val absent = "qzxqzx zqxzqx"
-    searcher.search(absent, 10) // memoize the absent terms as df = 0
-    val (none, zeroJobs) = jobsOf(searcher.search(absent, 10).collect())
-    assert(none.isEmpty && zeroJobs == 0, s"zero-hit search ran $zeroJobs jobs")
-    // a filter this searcher has not run before, its key's df memoized,
-    // costs exactly the unfiltered topKHits' jobs: it is a postings clause
-    searcher.termStats(Seq(IndexBuilder.FieldTermPrefix + "tool:bash"))
-    val (filtered, fqJobs) = jobsOf(searcher.topKHits(s"tool:bash $q", 10).collect())
-    assert(filtered.nonEmpty && fqJobs == topJobs, s"fq topKHits ran $fqJobs jobs, topKHits $topJobs")
-    val noRole = "role:nosuchrole data"
-    searcher.topKHits(noRole, 10).collect() // memoize the absent key as df = 0
-    val (noneRole, noRoleJobs) = jobsOf(searcher.topKHits(noRole, 10).collect())
-    assert(noneRole.isEmpty && noRoleJobs == 0, s"absent-filter topKHits ran $noRoleJobs jobs")
+    // a cached open is the corpus row plus the one dictionary pass; it runs
+    // on a copy of the index whose postings/ then moves away, so every query
+    // below also shows the pass materialized the whole cache (no parquet read)
+    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = TestSpark.tmpDir("idx-jobs") + "/idx"
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(indexDir), fs,
+      new org.apache.hadoop.fs.Path(dir), false, spark.sparkContext.hadoopConfiguration)
+    val (s, openJobs) = jobsOf(new Searcher(spark, dir))
+    assert(openJobs <= 2, s"cached open ran $openJobs jobs")
+    assert(s.usesColocatedPath)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/postings"), new org.apache.hadoop.fs.Path(s"$dir/postings.gone"))
+    try {
+      // the first search, on terms this searcher has never seen: no term
+      // stats and no schema job, only topKHits' jobs and the fetch
+      val q = "error retry data"
+      val (page, searchJobs) = jobsOf(s.search(q, 10).collect())
+      val (hits, topJobs) = jobsOf(s.topKHits(q, 10).collect())
+      assert(hits.nonEmpty && page.length == hits.length)
+      assert(page.map(_.getAs[Long]("doc_id")).toSeq == hits.map(_.doc_id).toSeq)
+      assert(searchJobs == topJobs + 1, s"search ran $searchJobs jobs, topKHits $topJobs")
+      // expansion and term stats are dictionary lookups
+      for (mq <- Seq("par*", "err*r", "errer~1")) {
+        val (p, expandJobs) = jobsOf(s.expand(QueryParser.parse(mq)))
+        assert(p.should.nonEmpty && expandJobs == 0, s"[$mq] expand ran $expandJobs jobs")
+      }
+      val (unseen, statJobs) = jobsOf(s.termStats(Seq("zzunseen1", "zzunseen2", "timeout")))
+      assert(unseen.keySet == Set("timeout") && statJobs == 0, s"termStats ran $statJobs jobs")
+      // a zero-hit query runs nothing
+      val (none, zeroJobs) = jobsOf(s.search("qzxqzx zqxzqx", 10).collect())
+      assert(none.isEmpty && zeroJobs == 0, s"zero-hit search ran $zeroJobs jobs")
+      // a filter or range filter this searcher has never run costs exactly
+      // the unfiltered topKHits' jobs: it is a postings clause
+      for (fq <- Seq("tool:bash", "role:[a TO z]")) {
+        val (filtered, fqJobs) = jobsOf(s.topKHits(s"$fq $q", 10).collect())
+        assert(filtered.nonEmpty && fqJobs == topJobs, s"[$fq] topKHits ran $fqJobs jobs, topKHits $topJobs")
+      }
+      val (noneRole, noRoleJobs) = jobsOf(s.topKHits("role:nosuchrole data", 10).collect())
+      assert(noneRole.isEmpty && noRoleJobs == 0, s"absent-filter topKHits ran $noRoleJobs jobs")
+    } finally s.close()
     val stop = new Searcher(spark, indexDir, cache = false,
       analyzer = new graft.analysis.Analyzer(Set("the", "a", "to")))
-    stop.search("the a to", 10) // resolve this epoch's docs relation
     val (stopPage, stopJobs) = jobsOf {
       val df = stop.search("the a to", 10)
       (df.schema.map(f => f.name -> f.dataType), df.collect())
     }
     assert(stopPage._1 == pageSchema && stopPage._2.isEmpty)
     assert(stopJobs == 0, s"all-stopword search ran $stopJobs jobs")
+  }
+
+  test("a Searcher on a file: URI index dir == one on the plain path") {
+    // the split guard lists postings files through the Hadoop FileSystem,
+    // which resolves a URI as it does a plain path
+    val largest = IndexBuilder.largestParquetFile(spark, s"$indexDir/postings")
+    assert(largest > 0 && IndexBuilder.largestParquetFile(spark, s"file:$indexDir/postings") == largest)
+    val uri = new Searcher(spark, s"file:$indexDir")
+    try {
+      assert(uri.usesColocatedPath == searcher.usesColocatedPath)
+      for (q <- Seq("the", "spark shuffle", "role:[system TO user] data", "par* data", "\"the data\"")) {
+        val a = uri.search(q, 10).collect().toSeq
+        assert(a.nonEmpty && a == searcher.search(q, 10).collect().toSeq, s"[$q] file: URI page differs")
+      }
+    } finally uri.close()
   }
 
   test("resume: interrupted build completes to an identical index") {
@@ -810,6 +844,8 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  private val wildcardGlobs = Seq("pa?quet", "err*r", "*tion", "s??rk", "?he", "d*a")
+
   test("general wildcard: ?/infix-*/leading-* expansion matches brute force; rank-identical") {
     val anal = graft.analysis.Analyzer.default
     val analyzeUdf = udf((s: String) => anal.analyze(s))
@@ -819,7 +855,7 @@ class EngineSpec extends AnyFunSuite {
       val rx = graft.query.Searcher.globRegex(glob).r
       vocab.filter(t => rx.matches(t)).toSeq.sorted.take(Searcher.MaxExpansions).toSet
     }
-    for (glob <- Seq("pa?quet", "err*r", "*tion", "s??rk", "?he", "d*a")) {
+    for (glob <- wildcardGlobs) {
       val p = searcher.expand(QueryParser.parse(glob))
       assert(p.multiTerms.isEmpty, s"[$glob] unexpanded multi-term left")
       assert(p.should.toSet == brute(glob), s"[$glob] expansion: ${p.should}")
@@ -926,17 +962,23 @@ class EngineSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("parser fuzz: 300 seeded random query strings never crash parse -> expand -> topK") {
-    // the reference survives arbitrary user query strings (SyntaxError ->
-    // 400, not a crash); our parser is total — worst case an empty result
+  /** 300 seeded random query strings over valid and broken syntax. */
+  private lazy val fuzzQueries: Seq[String] = {
     val rnd = new scala.util.Random(777)
     val atoms = Seq("the", "data", "spark", "error", "qzx", "role:user", "role:",
       "\"the data\"", "\"a b\"~2", "par*", "d?t*", "*", "?", "errer~1", "x~9",
       "+", "-", "AND", "OR", "NOT", "(", ")", "^2", "data^x", "[a TO b]",
       "role:[a TO", "\"unclosed", "~", "^", ":", "+-", "()", "a:b:c", "東京")
-    for (i <- 0 until 300) {
+    Seq.fill(300) {
       val n = 1 + rnd.nextInt(6)
-      val q = Seq.fill(n)(atoms(rnd.nextInt(atoms.length))).mkString(" ")
+      Seq.fill(n)(atoms(rnd.nextInt(atoms.length))).mkString(" ")
+    }
+  }
+
+  test("parser fuzz: 300 seeded random query strings never crash parse -> expand -> topK") {
+    // the reference survives arbitrary user query strings (SyntaxError ->
+    // 400, not a crash); our parser is total — worst case an empty result
+    for ((q, i) <- fuzzQueries.zipWithIndex) {
       try {
         val parsed = searcher.expand(QueryParser.parse(q))
         val hits = searcher.topKHits(parsed, 5).collect()
@@ -949,7 +991,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("concurrent queries on one searcher epoch == sequential (8 threads, mixed shapes)") {
     // the reference's SolrIndexSearcher is shared by all request threads;
-    // our epoch caches (postings persist, dfMemo, queryResultCache)
+    // our epoch state (postings persist, term dictionary, queryResultCache)
     // must tolerate the same concurrency
     val qs = Seq("the data", "+query merge", "error -timeout", "role:user spark index",
       "\"the data\"", "par* data", "errer~1 data", "timeout retry commit")
@@ -1061,6 +1103,114 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(m.map(_.getLong(1)).sum == searcher.corpus.doc_count)
     assert(m.map(_.getLong(2)).sum == searcher.corpus.sum_dl)
+  }
+
+  /** The Spark plans the driver-side expansion replaced, run over the
+    * index's terms/ table: the reference for `Searcher.expand`. */
+  private def referenceExpansion(dir: String, mt: MultiTerm): Vector[String] = {
+    val vocab = spark.read.parquet(s"$dir/terms")
+      .where(!$"term".startsWith(IndexBuilder.FieldTermPrefix))
+    (mt.kind match {
+      case 0 =>
+        vocab.where($"term".startsWith(mt.body))
+          .orderBy($"term").limit(Searcher.MaxExpansions)
+          .select($"term").as[String].collect()
+      case 2 =>
+        val prefix = mt.body.takeWhile(c => c != '*' && c != '?')
+        val base = if (prefix.isEmpty) vocab else vocab.where($"term".startsWith(prefix))
+        base.where($"term".rlike(Searcher.globRegex(mt.body)))
+          .orderBy($"term").limit(Searcher.MaxExpansions)
+          .select($"term").as[String].collect()
+      case _ =>
+        val (body, maxE) = (mt.body, mt.maxEdits)
+        vocab.select($"term").as[String]
+          .filter(t => Searcher.editDistanceAtMost(t, body, maxE))
+          .collect().sorted.take(Searcher.MaxExpansions)
+    }).toVector
+  }
+
+  /** The terms/ read the driver-side range keys replaced, in term order. */
+  private def referenceRangeKeys(dir: String, r: RangeFilter): Vector[String] = {
+    val p = s"${IndexBuilder.FieldTermPrefix}${r.field}:"
+    val (lo, hi) = (lit(p + r.lo), lit(p + r.hi))
+    val in = if (r.inclusive) $"term" >= lo && $"term" <= hi else $"term" > lo && $"term" < hi
+    spark.read.parquet(s"$dir/terms").where($"term".startsWith(p) && in)
+      .orderBy($"term").select($"term").as[String].collect().toVector
+  }
+
+  /** The driver's expansion of one multi-term clause, alone in a query. */
+  private def expansionOf(s: Searcher, mt: MultiTerm): Vector[String] =
+    s.expand(ParsedQuery(Vector.empty, Vector.empty, Vector.empty, Vector.empty,
+      multiTerms = Vector(mt.copy(occur = 1)))).should
+
+  test("driver-side expansion and range keys == the Spark reference over terms/") {
+    val fqRanges = Seq("role:[system TO user] data", "error -role:[system TO user]",
+      "role:{assistant TO user} data", "role:[a TO z] data", "tool:[a TO m] data")
+    val extra = Seq("+err*r data", "data -err*r", "pa?q*", "naï* data", "東* data")
+    val parsed = (goldenQueries ++ wildcardGlobs ++ extra ++ fuzzQueries ++ fqRanges)
+      .map(QueryParser.parse(_))
+    val clauses = parsed.flatMap(_.multiTerms).map(_.copy(occur = 1, boost = 1f)).distinct
+    val ranges = parsed.flatMap(_.rangeFilters).filter(r => r.field == "role" || r.field == "tool")
+      .map(_.copy(negated = false)).distinct
+    assert(clauses.map(_.kind).toSet == Set(0, 1, 2) && ranges.length >= 4, s"$clauses $ranges")
+    assert(clauses.exists(mt => mt.kind == 0 && mt.body.exists(_ > 127)), "no non-ASCII prefix")
+    val wants = clauses.map(mt => mt -> referenceExpansion(indexDir, mt))
+    assert(wants.count(_._2.nonEmpty) >= clauses.length / 2, "the reference expands too little")
+    wants.foreach { case (mt, want) =>
+      assert(expansionOf(searcher, mt) == want, s"[$mt] expansion differs from the reference")
+      assert(expansionOf(fallback, mt) == want, s"[$mt] cache=false expansion differs")
+    }
+    ranges.foreach { r =>
+      val want = referenceRangeKeys(indexDir, r)
+      assert(want.nonEmpty && searcher.rangeKeys(r) == want, s"[$r] range keys differ from the reference")
+    }
+    // termStats == the terms/ table's df, on every term and an absent one
+    val t = spark.read.parquet(s"$indexDir/terms").select($"term", $"df").as[(String, Long)].collect()
+    assert(searcher.termStats(t.map(_._1).toSeq :+ "qzxqzx") == t.toMap)
+  }
+
+  test("degenerate inputs: a one-turn index and a segment with no text postings") {
+    import java.sql.Timestamp
+    val ts = new Timestamp(0L)
+    val one = Seq(graft.index.Turn("c0", 0, "user", "deploy the data", null, ts))
+    // conv a (segment 0) has only empty texts: norms and field postings, no
+    // text posting
+    val emptyText = Seq(
+      graft.index.Turn("a", 0, "user", "", null, ts),
+      graft.index.Turn("a", 1, "assistant", "", "bash", ts),
+      graft.index.Turn("b", 0, "user", "deploy the data", null, ts),
+      graft.index.Turn("b", 1, "assistant", "retry the data", "bash", ts))
+    for ((name, turns, segs) <- Seq(("one-turn", one, 3), ("empty-text", emptyText, 2))) {
+      val dir = TestSpark.tmpDir(s"idx-$name")
+      IndexBuilder.build(spark, turns.toDF(), dir, IndexBuilder.Config(numSegments = segs))
+      val textSegs = spark.read.parquet(s"$dir/postings")
+        .where($"term" =!= "" && !$"term".startsWith(IndexBuilder.FieldTermPrefix))
+        .select($"segment_id").distinct().count()
+      val docSegs = spark.read.parquet(s"$dir/docs").select($"segment_id").distinct().count()
+      assert(textSegs == 1 && docSegs == turns.map(_.conv_id).distinct.length, s"[$name] layout")
+      for (cache <- Seq(true, false)) {
+        val s = new Searcher(spark, dir, cache = cache)
+        try {
+          assert(s.corpus.doc_count == turns.length)
+          assert(s.termStats(Seq("deploy", "data", "qzx")) ==
+            Map("deploy" -> 1L, "data" -> turns.count(_.text.contains("data")).toLong))
+          for (mq <- Seq("dep*", "d?ta", "dat~1", "*a")) {
+            val mt = QueryParser.parse(mq).multiTerms.head
+            assert(expansionOf(s, mt) == referenceExpansion(dir, mt), s"[$name $mq] expansion")
+          }
+          for (q <- Seq("deploy", "the data", "de* data", "role:user data", "-role:user data",
+              "role:[a TO z] deploy", "tool:bash data", "qzx")) {
+            val parsed = s.expand(QueryParser.parse(q))
+            val engine = s.topKHits(parsed, 10).collect().toSeq
+            val oracle = Oracle.topK(spark,
+              s.docs.select($"doc_id", $"text", $"role", $"tool"), parsed, 10).collect().toSeq
+            assert(engine == oracle, s"[$name cache=$cache $q] engine != oracle")
+            assert(s.search(q, 10).collect().map(_.getAs[Long]("doc_id")).toSeq == engine.map(_.doc_id),
+              s"[$name cache=$cache $q] search page")
+          }
+        } finally s.close()
+      }
+    }
   }
 
   test("v4 namespace: a literal text token `role:assistant` never collides with the role-field posting") {
